@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -21,22 +19,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Size the generated-class cache to the registry (static conf,
-      // default 100): with 217 distinct entries between a query's two
-      // interleaved samples, the default evicts every compiled codegen
-      // stage in between and BOTH samples pay Janino recompilation —
-      // measured as the r11 "cross-round drift" (TPC-DS +31%, prim
-      // +19% medians on unchanged code; see NOTES round-12 drift
-      // attribution). Any long-lived session serving hundreds of
-      // distinct queries wants this sized to its working set.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Engine.configure(spark)
+    val spark = Engine.session(cpus, "graft-bench")
 
     // warmup (not measured): codegen + parquet footer + JIT, including
     // the binary decode kernels (multimodal_decode_ppm)

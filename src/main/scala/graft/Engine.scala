@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import graft.functions.ImpalaFunctions
 
 /** Session factory + table registrar for the graft engine.
@@ -32,7 +33,8 @@ object Engine {
     "lineitem", "events", "documents", "embeddings")
 
   /** Build a local session with the engine's defaults. Queries coming from
-    * the driver reuse whatever session it created; this is for tests/tools.
+    * the driver reuse whatever session it created; this is for the tests,
+    * `Bench`, the tools and the benchmark runner.
     */
   def session(cores: String = "32", appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -47,6 +49,19 @@ object Engine {
       // drift attribution — default is 100 entries)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      // Fork-free local writes. Without the native libhadoop, Spark's
+      // default FileContext checkpoint manager forks `readlink` on every
+      // rename and Hadoop's local filesystem forks `chmod` on every file
+      // it creates: several process forks per streaming trigger (state
+      // deltas, offset, commit and source logs), and one per file of an
+      // INSERT or checkpoint. The FileSystem-based manager renames with
+      // one rename(2) on `file:` (same atomicity, same .crc and checksum
+      // files); LocalFs sets the same mode bits through java.nio.
+      // Durability is unchanged: neither path fsyncs.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.LocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     configure(spark)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-trigger phase breakdown for the streaming twins: runs one twin's
   * replay exactly like Bench does and prints every micro-batch's
   * StreamingQueryProgress durationMs map (latestOffset / getBatch /
@@ -21,14 +19,7 @@ object StreamProf {
     val twins = if (args.length > 1) args.drop(1).toSeq
       else Seq("cms", "neardedup", "asof", "interval")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Engine.configure(spark)
+    val spark = graft.Engine.session(cpus, "graft-streamprof")
 
     import org.apache.spark.sql.functions.{col, when}
     def table(n: String) = graft.Engine.table(spark, sfDir, n)
