@@ -51,305 +51,17 @@ object Bench {
       (elapsed, ok)
     }
 
-    // Streaming rows run with state partitioning sized to their key
-    // cardinality (8 instead of the batch-side 32): a micro-batch pays
-    // per-partition state-store commit/snapshot file ops EVERY batch,
-    // and at 1.5k-77k state rows 32 partitions is pure fixed overhead
-    // (measured on the as-of row: 18.5 s at 32 -> 5.7 s at 8, same
-    // 19,863 emissions). A cluster deployment sizes this to executor
-    // count; the semantic outputs are partitioning-independent (the
-    // specs pin them). Restored after each row.
-    def withStreamingPartitions[A](f: => A): A = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-    // ---- streaming replay harness (r13 verdict #6/#7) -------------
-    // The replay corpus is written ONCE per row into an 8-chunk
-    // parquet replay dir (range-partitioned + sorted on the replay
-    // order, chunk files stamped with ascending mtimes AND ascending
-    // names — FileStreamSource honors either) and the stream row reads
-    // it back as a FILE source with maxFilesPerTrigger=1: 8
-    // micro-batches in replay order, like the old MemoryStream feed,
-    // but the driver never holds the corpus (the old feed collect()ed
-    // it AND MemoryStream retains every batch for the query's
-    // lifetime — a driver-memory cap on bigger sweeps). Replay dirs
-    // are cached across the two bench passes, so pass 2 measures pure
-    // stream throughput; min-of-2 picks it up.
+    // streaming twin rows (graft.streaming.StreamTwins). Replay dirs
+    // are written on a row's first run and reused by the second pass,
+    // so pass 2 measures pure stream throughput; min-of-2 picks it up.
+    // stream_meta keeps each row's accounting from its last pass.
     val replayDirs = collection.mutable.Map.empty[String, String]
-    def replayStream(key: String, order: Seq[String],
-        build: => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val dir = replayDirs.getOrElseUpdate(key,
-        graft.streaming.FileReplay.write(build, order))
-      graft.streaming.FileReplay.read(spark, dir)
-    }
-    // per-row micro-batch accounting (r13 verdict #7): batches, summed
-    // trigger wall, input rows, final state rows, emitted rows — the
-    // normalization data the streaming-drift attribution needs; lands
-    // in BENCH_FULL.json as "stream_meta".
-    final case class StreamMeta(batches: Long, triggerMs: Long,
-      inputRows: Long, stateRows: Long, emitted: Long)
-    val streamMeta =
-      collection.mutable.LinkedHashMap.empty[String, StreamMeta]
-    def drainStream(row: String,
-        q: org.apache.spark.sql.streaming.StreamingQuery,
-        emitted: => Long): Unit = {
-      try {
-        q.processAllAvailable()
-        val ps = q.recentProgress
-        val state =
-          if (q.lastProgress != null && q.lastProgress.stateOperators.nonEmpty)
-            q.lastProgress.stateOperators(0).numRowsTotal
-          else -1L
-        val trig = ps.map(p =>
-          Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue()).getOrElse(0L)).sum
-        streamMeta(row) = StreamMeta(ps.length.toLong, trig,
-          ps.map(_.numInputRows).sum, state, emitted)
-      } finally q.stop()
-    }
-
-    // streaming near-dup throughput: the sf corpus replayed as 8
-    // micro-batches through the stateful MinHash star (r9 verdict #5).
-    def streamNearDedup(): Unit = withStreamingPartitions {
-      val src = replayStream("neardedup", Seq("doc_id"),
-        Engine.table(spark, sfDir, "documents")
-          .selectExpr("doc_id", "text"))
-      val name = s"bench_stream_neardedup_${System.nanoTime()}"
-      val q = graft.streaming.StreamNearDedup.starEdges(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_neardedup", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming AS-OF throughput (r11 verdict #5): the sf events table
-    // replayed in event-time order as 8 micro-batches through the
-    // stateful as-of join (clicks enriched with latest view per user).
-    // The state bound is per-key dominant-right + in-flight lefts,
-    // not history (stream_meta records it).
-    def streamAsof(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, when}
-      val src = replayStream("asof", Seq("ms", "id"),
-        Engine.table(spark, sfDir, "events")
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("user_id").as("key"), col("event_id").as("id"),
-            when(col("event_type") === "click", 1).otherwise(0)
-              .as("side"),
-            (col("ts") / 1000000L).cast("long").as("ms")))
-      val name = s"bench_stream_asof_${System.nanoTime()}"
-      val q = graft.streaming.StreamAsof.asofMatches(
-        src.select(col("key"), col("id"), col("side"),
-          (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_asof", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming CMS throughput: the sf corpus replayed as 8
-    // micro-batches through the stateful sketch; state is bounded by
-    // the 256 sketch cells (stream_meta records the bound held).
-    def streamCms(): Unit = withStreamingPartitions {
-      val src = replayStream("cms", Seq("doc_id"),
-        Engine.table(spark, sfDir, "documents")
-          .selectExpr("doc_id", "text"))
-      val name = s"bench_stream_cms_${System.nanoTime()}"
-      val q = graft.streaming.StreamHeavyHitters.cells(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      drainStream("organic_stream_cms", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming changelog-resolution throughput: an organic changelog
-    // (the snapshot_merge derivation at sf scale, multiple ops per
-    // key) replayed seq-ordered as 8 micro-batches; state = one row
-    // per distinct key (stream_meta records it).
-    def streamChangelog(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, lit, upper}
-      val src = replayStream("changelog", Seq("seq", "key"), {
-        val docs = Engine.table(spark, sfDir, "documents")
-          .selectExpr("doc_id", "substring(text, 1, 32) AS t")
-        docs.select(col("doc_id").as("key"), lit(1L).as("seq"),
-            lit("upsert").as("op"), col("t").as("payload"))
-          .unionAll(docs.filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id").as("key"), lit(2L).as("seq"),
-              lit("upsert").as("op"), upper(col("t")).as("payload")))
-          .unionAll(docs.filter(col("doc_id") % 7 === 0)
-            .select(col("doc_id").as("key"), lit(3L).as("seq"),
-              lit("delete").as("op"), lit("").as("payload")))
-      })
-      val name = s"bench_stream_changelog_${System.nanoTime()}"
-      val q = graft.streaming.StreamChangelog.resolved(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      drainStream("organic_stream_changelog", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming rolling-quantile histograms: events bucketed map-side
-    // (the SHARED clamped valueBucket — same domain rule as the batch
-    // entry and its oracle), replayed event-time-ordered as 8
-    // micro-batches; state = 256 buckets x ~7 live days (stream_meta
-    // records the bound).
-    def streamRollingQuantiles(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, expr}
-      val src = replayStream("rquantiles", Seq("ms", "b"),
-        Engine.table(spark, sfDir, "events")
-          .select(
-            graft.operators.StatOps.valueBucket(col("value")).as("b"),
-            expr("(ts - ts % 1000) div 86400000000000").as("day"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")))
-      val name = s"bench_stream_rq_${System.nanoTime()}"
-      val q = graft.streaming.StreamQuantiles.mergedCells(
-        src.select(col("b"), col("day"),
-          (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_rquantiles", q,
-        spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming funnel: the full event stream replayed
-    // event-time-ordered as 8 micro-batches; per-user conversion rows
-    // emitted watermark-final (state = users + in-flight buffers;
-    // stream_meta records the bound)
-    def streamFunnel(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-      val src = replayStream("funnel", Seq("ms", "user_id"),
-        Engine.table(spark, sfDir, "events")
-          .select(col("user_id"), col("event_type"),
-            expr("ts - ts % 1000").as("tsn"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")))
-      val name = s"bench_stream_funnel_${System.nanoTime()}"
-      val q = graft.streaming.StreamFunnel.conversions(
-        src.select(col("user_id"), col("event_type"), col("tsn"),
-          timestamp_micros(expr("tsn div 1000")).as("event_time")),
-        Seq("signup", "view", "click", "purchase"),
-        2L * 86400000000000L, watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_funnel", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming daily OHLC bars: the sf events value series replayed
-    // event-time-ordered as 8 micro-batches; one finished bar per day
-    // emitted at watermark completion, batch-equal to events_ohlc
-    // incl. the exact decimal-cents sum; state = in-flight days only
-    // (stream_meta records the bound).
-    def streamOhlc(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-      val src = replayStream("ohlc", Seq("tsn", "event_id"),
-        Engine.table(spark, sfDir, "events")
-          .select(col("event_id"), expr("ts - ts % 1000").as("tsn"),
-            col("value")))
-      val name = s"bench_stream_ohlc_${System.nanoTime()}"
-      val q = graft.streaming.StreamOhlc.dailyBars(
-        src.select(expr("tsn div 86400000000000").as("day"),
-          col("tsn"), col("event_id"), col("value"),
-          timestamp_micros(expr("tsn div 1000")).as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_ohlc", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming distribution drift: same bucketed feed (SHARED replay
-    // dir with the rquantiles row), 1-day window — exactly-once daily
-    // cells + the batch-identical stateless TVD pass over them; state
-    // prunes to in-flight days (stream_meta records the bound).
-    def streamDrift(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.{col, expr}
-      val src = replayStream("rquantiles", Seq("ms", "b"),
-        Engine.table(spark, sfDir, "events")
-          .select(
-            graft.operators.StatOps.valueBucket(col("value")).as("b"),
-            expr("(ts - ts % 1000) div 86400000000000").as("day"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")))
-      val name = s"bench_stream_drift_${System.nanoTime()}"
-      val q = graft.streaming.StreamDrift.dailyCells(
-        src.select(col("b"), col("day"),
-          (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_drift", q, {
-        // run the full stateless TVD pass inside the timed row (the
-        // row's semantic output), report emitted CELLS in the meta
-        graft.streaming.StreamDrift
-          .driftFromCells(spark.table(name)).count()
-        spark.table(name).count()
-      })
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming interval-overlap throughput: every event as a 60 s
-    // activity interval vs ±10 min incident windows around high-value
-    // errors, replayed end-time-ordered as 8 micro-batches; state =
-    // live buckets only (stream_meta records the bound).
-    def streamInterval(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.col
-      val src = replayStream("interval", Seq("end", "side", "id"), {
-        val ev = Engine.table(spark, sfDir, "events")
-          .selectExpr("event_id", "(ts - ts % 1000) AS tsn",
-            "event_type", "value")
-        val a = ev.selectExpr("event_id AS id", "0 AS side",
-          "tsn AS start", "tsn + 60000000000 AS end")
-        val b = ev.filter("event_type = 'error' AND value >= 200.0")
-          .selectExpr("event_id AS id", "1 AS side",
-            "tsn - 600000000000 AS start", "tsn + 600000000000 AS end")
-        a.unionAll(b)
-      })
-      val name = s"bench_stream_interval_${System.nanoTime()}"
-      val q = graft.streaming.StreamInterval.overlapMatches(
-        src.select(col("id"), col("side"), col("start"), col("end"),
-          (col("end") / 1.0e9).cast("timestamp").as("event_time")),
-        watermark = "0 seconds", shift = 40, maxBuckets = 4)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_interval", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
-    }
-
-    // streaming incremental-ingest throughput (r13 verdict #2): the sf
-    // shard (doc_id%5==0, %97!=0) replayed doc_id-ordered as 8
-    // micro-batches, quality-filtered map-side, anti-joined against
-    // the standing corpus's fp set (checkpointed once — the static
-    // side re-plans per batch but never re-derives), survivors
-    // deduped in keyed state; state = distinct surviving fps
-    // (stream_meta records it).
-    def streamIngest(): Unit = withStreamingPartitions {
-      import org.apache.spark.sql.functions.col
-      val src = replayStream("ingest", Seq("doc_id"),
-        Engine.table(spark, sfDir, "documents")
-          .filter(col("doc_id") % 5 === 0 && col("doc_id") % 97 =!= 0)
-          .select(col("doc_id"), col("source"), col("lang"),
-            col("text")))
-      val standing = Engine.table(spark, sfDir, "documents")
-        .filter(col("doc_id") % 5 =!= 0)
-        .select(graft.operators.CorpusOps.docFp(col("text")).as("fp"))
-        .distinct().localCheckpoint()
-      val name = s"bench_stream_ingest_${System.nanoTime()}"
-      // snapshotStatic: the standing fp set never changes inside the
-      // row, so freeze it into ONE broadcast set instead of paying a
-      // per-micro-batch broadcast rebuild (r15 StreamProf measured it
-      // as the slowest per-trigger fixed cost; at 100 TB the standing
-      // side is a bucketed table or Bloom instead — StreamIngest
-      // scaladoc)
-      val q = graft.streaming.StreamIngest.survivors(src, standing,
-        snapshotStatic = true)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      drainStream("organic_stream_ingest", q, spark.table(name).count())
-      spark.catalog.dropTempView(name)
+    val streamMeta = collection.mutable.LinkedHashMap
+      .empty[String, graft.streaming.StreamTwins.Meta]
+    val streamRows = graft.streaming.StreamTwins.all.map { t =>
+      val row = s"organic_stream_${t.name}"
+      row -> (() => streamMeta(row) =
+        graft.streaming.StreamTwins.run(spark, sfDir, t, replayDirs))
     }
 
     import graft.operators.{DedupOps, SimilarityOps}
@@ -378,17 +90,8 @@ object Bench {
       "organic_sim_pq" ->
         (() => { SimilarityOps.pqTopK(spark, sfDir, planted = false).count(); () }),
       "organic_sim_lsh" ->
-        (() => { SimilarityOps.lshBucket(spark, sfDir, planted = false).count(); () }),
-      "organic_stream_neardedup" -> (() => streamNearDedup()),
-      "organic_stream_asof" -> (() => streamAsof()),
-      "organic_stream_cms" -> (() => streamCms()),
-      "organic_stream_changelog" -> (() => streamChangelog()),
-      "organic_stream_interval" -> (() => streamInterval()),
-      "organic_stream_rquantiles" -> (() => streamRollingQuantiles()),
-      "organic_stream_drift" -> (() => streamDrift()),
-      "organic_stream_funnel" -> (() => streamFunnel()),
-      "organic_stream_ohlc" -> (() => streamOhlc()),
-      "organic_stream_ingest" -> (() => streamIngest()),
+        (() => { SimilarityOps.lshBucket(spark, sfDir, planted = false).count(); () })
+    ) ++ streamRows ++ Seq[(String, () => Unit)](
       "organic_kmeans_fit" ->
         (() => { graft.operators.MlOps.kmeansFit(
           Engine.table(spark, sfDir, "embeddings")
@@ -413,15 +116,11 @@ object Bench {
     val recorded = results.map(r => (r._1, r._2))
 
     streamMeta.foreach { case (row, m) =>
-      System.err.println(
-        s"[bench] $row batches=${m.batches} trigger_ms=${m.triggerMs} " +
-          s"input_rows=${m.inputRows} state_rows=${m.stateRows} " +
-          s"emitted=${m.emitted}")
+      System.err.println(s"[bench] $row ${m.json}")
     }
     if (streamMeta.contains("organic_stream_neardedup")) {
-      val buckets = DedupOps.minhashBandify(
+      val buckets = graft.streaming.StreamNearDedup.stateBound(
         Engine.table(spark, sfDir, "documents").selectExpr("doc_id", "text"))
-        .select("band_idx", "band_hash").distinct().count()
       System.err.println(
         s"[bench] organic_stream_neardedup distinct_buckets=$buckets " +
           "(state is bucket-bounded)")
@@ -453,15 +152,10 @@ object Bench {
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     // per-stream-row micro-batch accounting (r13 verdict #7): the
     // normalization data cross-round streaming-drift attribution
-    // needs — batch count, summed trigger wall, input/emitted rows,
-    // final state rows (from the LAST bench pass of each row)
-    val metaJson = streamMeta.map { case (row, m) =>
-      "\"" + row + "\":{\"batches\":" + m.batches +
-        ",\"trigger_ms\":" + m.triggerMs +
-        ",\"input_rows\":" + m.inputRows +
-        ",\"state_rows\":" + m.stateRows +
-        ",\"emitted\":" + m.emitted + "}"
-    }.mkString("{", ",", "}")
+    // needs (from the LAST bench pass of each row)
+    val metaJson = streamMeta
+      .map { case (row, m) => "\"" + row + "\":" + m.json }
+      .mkString("{", ",", "}")
     try {
       val full = recorded.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")

@@ -193,9 +193,7 @@ object Engine {
     * lineage is gone). Production runs set
     * `graft.reliableCheckpoint=true` plus
     * `sparkContext.setCheckpointDir` on durable storage: same plan
-    * shape, blocks recoverable (r14 verdict #5 — the DedupOps
-    * connected-components path has carried the same switch as
-    * `graft.cc.reliableCheckpoint` since r13).
+    * shape, blocks recoverable.
     */
   def materialize(df: DataFrame): DataFrame = {
     val s = df.sparkSession
@@ -214,37 +212,6 @@ object Engine {
     */
   implicit class Materialize(private val df: DataFrame) {
     def materialized: DataFrame = materialize(df)
-  }
-
-  /** [[materialize]] with a PINNED physical layout: hash-partition on
-    * `keys`, sort within partitions, checkpoint — with AQE disabled
-    * for this one plan. Under AQE the checkpointed LogicalRDD reports
-    * UnknownPartitioning (measured on this Spark build via
-    * tools/CkptProbe: a downstream same-key groupBy re-exchanged;
-    * with AQE off it didn't), so iterative consumers re-shuffled the
-    * materialized relation EVERY round. With the layout pinned, every
-    * later join/aggregate keyed on `keys` skips its exchange AND its
-    * sort — the exchange-once-then-iterate contract the cc/PageRank
-    * loops were designed around (guide §2.4).
-    *
-    * TWO materializations, deliberately: the derivation runs under the
-    * session's normal AQE settings (disabling AQE for the whole
-    * derivation plan measured 2-3x slower on the banded-dedup edge
-    * derivations), then the PIN re-partitions the already-checkpointed
-    * (hence cheap, executor-local) relation with AQE off so the final
-    * LogicalRDD carries the layout. The pin shuffle forgoes AQE skew
-    * splitting; callers pass a key whose working set is bounded (edge
-    * lists, pair stats).
-    */
-  def materializePartitioned(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val s = df.sparkSession
-    val flat = materialize(df)
-    val prev = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try materialize(
-      flat.repartition(keys: _*).sortWithinPartitions(keys: _*))
-    finally s.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   // last mounted sf dir per session: mounting eagerly reads 10 parquet

@@ -901,10 +901,10 @@ object DedupOps {
     * `localCheckpoint(eager)` — blocks live on executors, so losing an
     * executor mid-query kills the query (task-level retry within a
     * round is fine, FaultToleranceSpec). For long-running cluster jobs
-    * set `graft.cc.reliableCheckpoint=true` (and a
-    * `sparkContext.setCheckpointDir` on durable storage): each round
-    * then checkpoints to the reliable store and label lineage survives
-    * executor loss at the cost of one round-trip write per round.
+    * set `graft.reliableCheckpoint=true` (see [[Engine.materialize]]):
+    * each round then checkpoints to the reliable store and label
+    * lineage survives executor loss at the cost of one round-trip write
+    * per round.
     *
     * Shape note vs [[GraphOps.connectedComponents]]: this hash-min +
     * double-jump loop is tuned for the dedup band graphs it serves —
@@ -934,19 +934,9 @@ object DedupOps {
     */
   def connectedComponentsWithRounds(pairs: DataFrame,
       maxRounds: Int = 20): (DataFrame, Int, Boolean) = {
-    val reliable = pairs.sparkSession.conf
-      .get("graft.cc.reliableCheckpoint", "false").toBoolean
-    // fail fast: df.checkpoint(true) without a checkpoint dir dies
-    // mid-job on round 1 with a generic SparkException
-    require(!reliable ||
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "graft.cc.reliableCheckpoint=true requires " +
-        "sparkContext.setCheckpointDir on durable storage")
     // materialize each round's working set AND break lineage, so round
     // N+1's self-referential joins neither re-run the whole history nor
     // trip ambiguous-self-join
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     // pre-partition the edge set on the probe key: the per-round
     // neighbor join requires hashpartitioning(b), so the materialized
     // layout satisfies it and edges never re-shuffle across rounds
@@ -975,10 +965,10 @@ object DedupOps {
     // per-round re-ANALYSIS of the full upstream tree (48 s -> 3.8 s
     // in r14) and lineage growth. The repartition still bounds the
     // materialized layout's skew.
-    val edges = materialize(pairs.select(col("a"), col("b"))
+    val edges = Engine.materialize(pairs.select(col("a"), col("b"))
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("b")))
-    var labels = materialize(edges.select(col("a").as("id")).distinct()
+    var labels = Engine.materialize(edges.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("cluster_id")))
     var rounds = 0
     var converged = false
@@ -1017,7 +1007,7 @@ object DedupOps {
           col("cluster_id").as("jlabel")), col("cluster_id") === col("jid"))
         .select(p("id"), least(col("cluster_id"), col("jlabel"))
           .as("cluster_id"), p("old"))
-      val next = materialize(jump(jump(minned)))
+      val next = Engine.materialize(jump(jump(minned)))
       // no join: `old` rode along through the round
       val changed = next.filter(col("cluster_id") =!= col("old")).count()
       labels = next.select(col("id"), col("cluster_id"))

@@ -65,7 +65,7 @@ object GraphOps {
     // UnknownPartitioning (tools/CkptProbe), so each iteration's rank
     // join DOES re-exchange the edge relation (~14 MB/round at sf0.1,
     // visible in the plan as Sort+Exchange over Scan ExistingRDD).
-    // Pinning the layout (Engine.materializePartitioned) removed
+    // Pinning the layout (OPTIMIZATION_r15.md) removed
     // those per-round exchanges in the plan but measured SLOWER
     // end-to-end (graph_pagerank 2.9 -> 8.0 s bench: the extra
     // materialization pass plus un-coalesced 32-partition rounds and

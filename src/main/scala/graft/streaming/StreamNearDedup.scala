@@ -76,6 +76,13 @@ object StreamNearDedup {
         GroupStateTimeout.NoTimeout)(emit)
   }
 
+  /** Distinct (band, bucket) keys of a batch (doc_id, text) relation:
+    * the bound on [[starEdges]]' state rows.
+    */
+  def stateBound(docs: DataFrame): Long =
+    DedupOps.minhashBandify(docs).select("band_idx", "band_hash")
+      .distinct().count()
+
   final case class BandDocT(band_idx: Int, band_hash: Long, doc_id: Long,
       event_time: java.sql.Timestamp)
 

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{Engine, SparkEntry}
 import graft.operators.DedupOps
+import graft.streaming.{FileReplay, StreamNearDedup, StreamTwins}
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep runner (r10 verdict #4): runs the connected-components
@@ -11,9 +12,12 @@ import org.apache.spark.sql.functions._
   * [[DedupOps.connectedComponentsWithRounds]] so the artifact records
   * rounds-to-converge and the converged flag — the measurement behind
   * the "diameter-bounded rounds" claim.
+  * The streaming twin rows run each [[StreamTwins]] entry through
+  * [[StreamTwins.run]], Bench's own replay path: the corpus is
+  * replayed from files and never lands on the driver, so they run at
+  * every replication.
   * Usage: ScaleSweep <dir> [entry...] — with entry names given, only
-  * those rows run (e.g. skip the stream row at 1000x, where its
-  * replay harness would collect 5M docs to the driver).
+  * those rows run.
   */
 object ScaleSweep {
   def main(args: Array[String]): Unit = {
@@ -117,39 +121,6 @@ object ScaleSweep {
         sweepDocs.select(col("text")), 16)
       (m.count(), "")
     })
-    // streaming MinHash star replay: state rows vs distinct buckets —
-    // on the replicated sweep corpus identical texts share buckets, so
-    // state must stay ~flat while the corpus grows Nx (bucket-ndv-bound,
-    // not corpus-bound)
-    emit("organic_stream_neardedup", () => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val docs = Engine.table(spark, dir, "documents")
-        .selectExpr("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val name = s"sweep_stream_${System.nanoTime()}"
-      val input = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamNearDedup
-        .starEdges(input.toDF().toDF("doc_id", "text"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      var stateRows = -1L
-      try {
-        docs.grouped(math.max(1, (docs.size + 7) / 8)).foreach { c =>
-          input.addData(c: _*); q.processAllAvailable()
-        }
-        val p = q.lastProgress
-        if (p != null && p.stateOperators.nonEmpty)
-          stateRows = p.stateOperators(0).numRowsTotal
-      } finally q.stop()
-      val n = spark.table(name).count()
-      spark.catalog.dropTempView(name)
-      val buckets = DedupOps.minhashBandify(
-        Engine.table(spark, dir, "documents").selectExpr("doc_id", "text"))
-        .select("band_idx", "band_hash").distinct().count()
-      (n, s""","state_rows":$stateRows,"distinct_buckets":$buckets,"docs":${docs.size}""")
-    })
     // full-corpus Lloyd's: per-iteration cost is one assignment scan +
     // one (k x dim)-row exact-decimal aggregate — wall-clock should be
     // linear in corpus size with CONSTANT driver/model state (k*dim),
@@ -243,42 +214,11 @@ object ScaleSweep {
         a, b, "a_s", "a_e", "b_s", "b_e", shift = 10)
       (joined.count(), "")
     })
-    // streaming CMS replay: the 256-cell state bound must hold at any
-    // corpus size (run <= 100x — the replay harness collects docs to
-    // the driver like the near-dedup row)
-    emit("organic_stream_cms", () => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val docs = Engine.table(spark, dir, "documents")
-        .selectExpr("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val name = s"sweep_cms_${System.nanoTime()}"
-      val input = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamHeavyHitters
-        .cells(input.toDF().toDF("doc_id", "text"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      var stateRows = -1L
-      try {
-        docs.grouped(math.max(1, (docs.size + 7) / 8)).foreach { c =>
-          input.addData(c: _*); q.processAllAvailable()
-        }
-        val p = q.lastProgress
-        if (p != null && p.stateOperators.nonEmpty)
-          stateRows = p.stateOperators(0).numRowsTotal
-      } finally q.stop()
-      val nOut = spark.table(name).count()
-      spark.catalog.dropTempView(name)
-      (nOut, s""","state_rows":$stateRows,"docs":${docs.size}""")
-    })
     // ---- events-analytics family at replicated users (r13 verdict
     // #3): the sweep corpus replicates events along the USER axis
     // (gen_scale_sweep.py), so these measure genuine user-cardinality
     // scaling, not identical re-runs. Batch entries first (wall +
-    // rows), then the stateful streaming twins with their state
-    // bounds — fed via FileReplay (r13 verdict #6: the corpus never
-    // lands on the driver, so the 100x sweep is not driver-capped).
+    // rows); the streaming twins follow.
     for (e <- Seq("events_funnel", "events_funnel_k4",
         "events_retention", "events_transitions",
         "stat_rolling_quantiles", "stat_drift_tvd", "events_ohlc",
@@ -287,173 +227,25 @@ object ScaleSweep {
         "graph_triangles", "graph_pagerank")) {
       emit(e, () => (SparkEntry.queries(e)(spark, dir).count(), ""))
     }
-    // stream rows run with state partitioning sized to key cardinality
-    // (the Bench withStreamingPartitions rationale: per-partition
-    // state-store commit/snapshot ops are pure fixed overhead per
-    // micro-batch at these key counts)
-    def withStreamParts[A](f: => A): A = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // the streaming twins (graft.streaming.StreamTwins) with their
+    // state bounds: on the replicated corpus identical texts share
+    // MinHash buckets, so the near-dup state must stay ~flat while the
+    // corpus grows Nx (bucket-ndv-bound, distinct_buckets), and the CMS
+    // state stays at its 256 cells. neardedup and cms keep their older
+    // organic_stream_ row names; their docs = input rows.
+    for (t <- StreamTwins.all) {
+      val organic = Set("neardedup", "cms")(t.name)
+      emit((if (organic) "organic_stream_" else "stream_") + t.name, () => {
+        val replays = collection.mutable.Map.empty[String, String]
+        val m = try StreamTwins.run(spark, dir, t, replays)
+          finally replays.values.foreach(FileReplay.drop)
+        (m.emitted, s""","state_rows":${m.stateRows},"batches":${m.batches}""" +
+          s""","trigger_ms":${m.triggerMs}""" +
+          (if (t.name != "neardedup") "" else
+            s""","distinct_buckets":${StreamNearDedup.stateBound(sweepDocs)}""") +
+          (if (organic) s""","docs":${m.inputRows}""" else ""))
+      })
     }
-    def drainToExtra(q: org.apache.spark.sql.streaming.StreamingQuery,
-        table: String): (Long, String) = {
-      try q.processAllAvailable() finally q.stop()
-      val ps = q.recentProgress
-      val state =
-        if (q.lastProgress != null && q.lastProgress.stateOperators.nonEmpty)
-          q.lastProgress.stateOperators(0).numRowsTotal
-        else -1L
-      val trig = ps.map(p =>
-        Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue()).getOrElse(0L)).sum
-      val n = spark.table(table).count()
-      spark.catalog.dropTempView(table)
-      (n, s""","state_rows":$state,"batches":${ps.length},"trigger_ms":$trig""")
-    }
-    emit("stream_asof", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "events")
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("user_id").as("key"), col("event_id").as("id"),
-            when(col("event_type") === "click", 1).otherwise(0)
-              .as("side"),
-            (col("ts") / 1000000L).cast("long").as("ms")),
-        Seq("ms", "id"))
-      val name = s"sweep_asof_${System.nanoTime()}"
-      val q = graft.streaming.StreamAsof.asofMatches(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(col("key"), col("id"), col("side"),
-            (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_interval", () => withStreamParts {
-      val ev = Engine.table(spark, dir, "events")
-        .selectExpr("event_id", "(ts - ts % 1000) AS tsn",
-          "event_type", "value")
-      val a = ev.selectExpr("event_id AS id", "0 AS side",
-        "tsn AS start", "tsn + 60000000000 AS end")
-      val b = ev.filter("event_type = 'error' AND value >= 200.0")
-        .selectExpr("event_id AS id", "1 AS side",
-          "tsn - 600000000000 AS start", "tsn + 600000000000 AS end")
-      val dir2 = graft.streaming.FileReplay.write(
-        a.unionAll(b), Seq("end", "side", "id"))
-      val name = s"sweep_interval_${System.nanoTime()}"
-      val q = graft.streaming.StreamInterval.overlapMatches(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(col("id"), col("side"), col("start"), col("end"),
-            (col("end") / 1.0e9).cast("timestamp").as("event_time")),
-        watermark = "0 seconds", shift = 40, maxBuckets = 4)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_rquantiles", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "events")
-          .select(
-            graft.operators.StatOps.valueBucket(col("value")).as("b"),
-            expr("(ts - ts % 1000) div 86400000000000").as("day"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")),
-        Seq("ms", "b"))
-      val name = s"sweep_rq_${System.nanoTime()}"
-      val q = graft.streaming.StreamQuantiles.mergedCells(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(col("b"), col("day"),
-            (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_drift", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "events")
-          .select(
-            graft.operators.StatOps.valueBucket(col("value")).as("b"),
-            expr("(ts - ts % 1000) div 86400000000000").as("day"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")),
-        Seq("ms", "b"))
-      val name = s"sweep_drift_${System.nanoTime()}"
-      val q = graft.streaming.StreamDrift.dailyCells(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(col("b"), col("day"),
-            (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_funnel", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "events")
-          .select(col("user_id"), col("event_type"),
-            expr("ts - ts % 1000").as("tsn"),
-            expr("(ts - ts % 1000) div 1000000").as("ms")),
-        Seq("ms", "user_id"))
-      val name = s"sweep_funnel_${System.nanoTime()}"
-      val q = graft.streaming.StreamFunnel.conversions(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(col("user_id"), col("event_type"), col("tsn"),
-            timestamp_micros(expr("tsn div 1000")).as("event_time")),
-        Seq("signup", "view", "click", "purchase"),
-        2L * 86400000000000L, watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_ohlc", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "events")
-          .select(col("event_id"), expr("ts - ts % 1000").as("tsn"),
-            col("value")),
-        Seq("tsn", "event_id"))
-      val name = s"sweep_ohlc_${System.nanoTime()}"
-      val q = graft.streaming.StreamOhlc.dailyBars(
-        graft.streaming.FileReplay.read(spark, dir2)
-          .select(expr("tsn div 86400000000000").as("day"),
-            col("tsn"), col("event_id"), col("value"),
-            timestamp_micros(expr("tsn div 1000")).as("event_time")),
-        watermark = "0 seconds")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
-    emit("stream_ingest", () => withStreamParts {
-      val dir2 = graft.streaming.FileReplay.write(
-        Engine.table(spark, dir, "documents")
-          .filter(col("doc_id") % 5 === 0 && col("doc_id") % 97 =!= 0)
-          .select(col("doc_id"), col("source"), col("lang"),
-            col("text")),
-        Seq("doc_id"))
-      val standing = Engine.table(spark, dir, "documents")
-        .filter(col("doc_id") % 5 =!= 0)
-        .select(graft.operators.CorpusOps.docFp(col("text")).as("fp"))
-        .distinct().localCheckpoint()
-      val name = s"sweep_ingest_${System.nanoTime()}"
-      val q = graft.streaming.StreamIngest.survivors(
-        graft.streaming.FileReplay.read(spark, dir2), broadcast(standing))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val r = drainToExtra(q, name)
-      graft.streaming.FileReplay.drop(dir2)
-      r
-    })
     emit("dedup_semantic_scaledk", () => {
       val emb = sweepEmb
       val k = math.max(10, (emb.count() / 50L).toInt)

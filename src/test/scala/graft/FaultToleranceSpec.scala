@@ -172,17 +172,17 @@ class FaultToleranceSpec extends AnyFunSuite {
     import spark.implicits._
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "precondition: no suite may set the checkpoint dir before this test")
-    spark.conf.set("graft.cc.reliableCheckpoint", "true")
+    spark.conf.set("graft.reliableCheckpoint", "true")
     try {
       val e = intercept[IllegalArgumentException] {
         DedupOps.connectedComponents(Seq((1L, 2L)).toDF("a", "b")).count()
       }
       assert(e.getMessage.contains("setCheckpointDir"), e.getMessage)
-    } finally spark.conf.set("graft.cc.reliableCheckpoint", "false")
+    } finally spark.conf.set("graft.reliableCheckpoint", "false")
   }
 
   test("reliable-checkpoint CC survives a mid-round task kill, labels unchanged") {
-    // the conf-gated mode (graft.cc.reliableCheckpoint=true) answers
+    // the conf-gated mode (graft.reliableCheckpoint=true) answers
     // executor loss on long cluster jobs; locally the exercisable analog
     // is a mid-round task kill — the round must retry through the
     // reliable checkpoint store and converge to the same labels
@@ -199,7 +199,7 @@ class FaultToleranceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("graft.cc.reliableCheckpoint", "true")
+    spark.conf.set("graft.reliableCheckpoint", "true")
     var got: Seq[(Long, Long)] = Nil
     try {
       val kills = withTaskKill("first") {
@@ -207,7 +207,7 @@ class FaultToleranceSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       }
       assert(kills == 1, "fault was not injected")
-    } finally spark.conf.set("graft.cc.reliableCheckpoint", "false")
+    } finally spark.conf.set("graft.reliableCheckpoint", "false")
     assert(got == clean)
     // the reliable store was actually used: round outputs landed in dir
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

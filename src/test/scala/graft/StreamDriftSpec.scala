@@ -109,34 +109,4 @@ class StreamDriftSpec extends AnyFunSuite {
     assert(stateRows >= 0 && stateRows <= 1,
       s"state $stateRows not pruned to in-flight days")
   }
-
-  test("bench-row path: FileReplay -> memory sink -> driftFromCells " +
-    "(memory-sink self-join attributes need the checkpoint)") {
-    // the drift pass self-joins its input; a memory-sink view's
-    // attributes can't be deduplicated across self-join arms, which
-    // driftFromCells' checkpoint exists to absorb — this pins the
-    // exact Bench row shape end-to-end
-    Engine.configure(spark)
-    val sfDir = "/root/testdata/sf0.001"
-    val dir = graft.streaming.FileReplay.write(
-      Engine.table(spark, sfDir, "events")
-        .select(
-          graft.operators.StatOps.valueBucket(col("value")).as("b"),
-          expr("(ts - ts % 1000) div 86400000000000").as("day"),
-          expr("(ts - ts % 1000) div 1000000").as("ms")),
-      Seq("ms", "b"))
-    val name = s"drift_benchrow_${System.nanoTime()}"
-    val q = StreamDrift.dailyCells(
-      graft.streaming.FileReplay.read(spark, dir)
-        .select(col("b"), col("day"),
-          (col("ms") / 1000.0).cast("timestamp").as("event_time")),
-      watermark = "0 seconds")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val n = StreamDrift.driftFromCells(spark.table(name)).count()
-    assert(n > 0)
-    graft.streaming.FileReplay.drop(dir)
-    spark.catalog.dropTempView(name)
-  }
 }
