@@ -1,7 +1,19 @@
 package graft
 
-/** Driver benchmark main: runs every registered query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
+import scala.collection.mutable
+
+import org.apache.spark.sql.SparkSession
+
+import graft.operators.{DedupOps, MlOps, SimilarityOps}
+import graft.streaming.{FileReplay, StreamNearDedup, StreamTwins}
+
+/** Driver benchmark main: runs every row of [[rows]] against
+  * SPARK_GRAFT_SF_DIR, prints per-query seconds as JSON (the full map
+  * on the last stdout line) and writes BENCH_FULL.json.
+  *
+  * Usage: `graft.Bench [row...]`. With row names only those rows run,
+  * under the same protocol and with the same output; an unknown name
+  * fails before anything is timed.
   *
   * Protocol (r10 verdict #3 — INTERLEAVED min-of-2): the whole suite
   * runs twice END-TO-END and each query records the MIN across the two
@@ -20,6 +32,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Engine.session(cpus, "graft-bench")
+    val replays = mutable.Map.empty[String, String]
+    val picked =
+      try select(rows(spark, sfDir, replays), args.toSeq)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[bench] ${e.getMessage}")
+        spark.stop()
+        sys.exit(2)
+      }
 
     // warmup (not measured): codegen + parquet footer + JIT, including
     // the binary decode kernels (multimodal_decode_ppm)
@@ -29,104 +49,24 @@ object Bench {
       SparkEntry.queries("multimodal_decode_ppm")(spark, sfDir).count()
     } catch { case _: Throwable => () }
 
-    def timed(f: () => Unit): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { f(); true } catch { case _: Throwable => false }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // Inter-query hygiene (r15 measurement fix, recorded in
-      // OPTIMIZATION_r15.md): the iterative/multi-pass operators
-      // eagerly checkpoint intermediates whose blocks are only
-      // reclaimed when the ContextCleaner gets around to the GC'd
-      // Datasets — across 275 queries x 2 passes the leaked blocks
-      // compound into storage/GC pressure that inflates every LATER
-      // row (cross-query interference, not that query's cost).
-      // Release them between queries, outside the timed region.
-      // Queries are independent (each invocation rebuilds its own
-      // checkpoints), so dropping finished queries' blocks is safe.
-      // BLOCKING: an async unpersist storm overlaps the NEXT query's
-      // timed region (measured: late-suite rows inflated 1.3-2x while
-      // the warmup-touched canaries got faster).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      (elapsed, ok)
-    }
-
-    // streaming twin rows (graft.streaming.StreamTwins). Replay dirs
-    // are written on a row's first run and reused by the second pass,
-    // so pass 2 measures pure stream throughput; min-of-2 picks it up.
-    // stream_meta keeps each row's accounting from its last pass.
-    val replayDirs = collection.mutable.Map.empty[String, String]
-    val streamMeta = collection.mutable.LinkedHashMap
-      .empty[String, graft.streaming.StreamTwins.Meta]
-    val streamRows = graft.streaming.StreamTwins.all.map { t =>
-      val row = s"organic_stream_${t.name}"
-      row -> (() => streamMeta(row) =
-        graft.streaming.StreamTwins.run(spark, sfDir, t, replayDirs))
-    }
-
-    import graft.operators.{DedupOps, SimilarityOps}
-    // organic-path timings (r7 verdict #6): the REAL thresholds, not the
-    // planted-twin projections — bench-visible but not oracle entries
-    // (their outputs are engine-internal candidate sets). The *_star
-    // rows are the cluster-feeding star-emission semantic (renamed from
-    // organic_dedup_{minhash,simhash} in r11 when those rows' semantics
-    // changed — recorded series stay self-consistent); *_pairs keep the
-    // verified all-pairs candidate semantic.
-    val organic = Seq[(String, () => Unit)](
-      "organic_dedup_minhash_star" ->
-        (() => { DedupOps.minhashStarEdges(spark, sfDir).count(); () }),
-      "organic_dedup_simhash_star" ->
-        (() => { DedupOps.simhashStarEdges(spark, sfDir).count(); () }),
-      "organic_dedup_simhash_star_full" ->
-        (() => { DedupOps.simhashStarEdgesFull(spark, sfDir).count(); () }),
-      "organic_dedup_minhash_pairs" ->
-        (() => { DedupOps.minhashPairs(spark, sfDir, planted = false).count(); () }),
-      "organic_dedup_simhash_pairs" ->
-        (() => { DedupOps.simhashPairs(spark, sfDir, planted = false).count(); () }),
-      "organic_dedup_ngram" ->
-        (() => { DedupOps.ngramJaccardPairs(spark, sfDir, planted = false).count(); () }),
-      "organic_sim_ivf" ->
-        (() => { SimilarityOps.ivfTopK(spark, sfDir, planted = false).count(); () }),
-      "organic_sim_pq" ->
-        (() => { SimilarityOps.pqTopK(spark, sfDir, planted = false).count(); () }),
-      "organic_sim_lsh" ->
-        (() => { SimilarityOps.lshBucket(spark, sfDir, planted = false).count(); () })
-    ) ++ streamRows ++ Seq[(String, () => Unit)](
-      "organic_kmeans_fit" ->
-        (() => { graft.operators.MlOps.kmeansFit(
-          Engine.table(spark, sfDir, "embeddings")
-            .selectExpr("vec_id", "embedding"),
-          "vec_id", "embedding", k = 10, iters = 5); () }))
-
-    val thunks: Seq[(String, () => Unit)] =
-      SparkEntry.all.map(q =>
-        q.name -> (() => { q.run(spark, sfDir).count(); () })) ++ organic
-
-    // two full passes, min per query ACROSS passes
-    val pass1 = thunks.map { case (_, f) => timed(f) }
-    val pass2 = thunks.map { case (_, f) => timed(f) }
-    val names = thunks.map(_._1)
-    val results = names.indices.map { i =>
-      val samples = Seq(pass1(i), pass2(i))
-      val good = samples.filter(_._2)
-      val v = (if (good.nonEmpty) good else samples).map(_._1).min
-      (names(i), v, good.nonEmpty)
-    }
-    val errors = results.filter(!_._3).map(_._1)
-    val recorded = results.map(r => (r._1, r._2))
+    val results = time(spark, picked)
+    val errors = results.filter(!_.ok).map(_.name)
+    val recorded = results.map(r => (r.name, r.seconds))
+    // per-stream-row micro-batch accounting, from each row's last pass
+    val streamMeta = results.flatMap(r => r.meta.map(r.name -> _))
 
     streamMeta.foreach { case (row, m) =>
       System.err.println(s"[bench] $row ${m.json}")
     }
-    if (streamMeta.contains("organic_stream_neardedup")) {
-      val buckets = graft.streaming.StreamNearDedup.stateBound(
+    if (streamMeta.exists(_._1 == "organic_stream_neardedup")) {
+      val buckets = StreamNearDedup.stateBound(
         Engine.table(spark, sfDir, "documents").selectExpr("doc_id", "text"))
       System.err.println(
         s"[bench] organic_stream_neardedup distinct_buckets=$buckets " +
           "(state is bucket-bounded)")
     }
     // replay dirs are temp-dir artifacts; drop them best-effort
-    replayDirs.values.foreach(graft.streaming.FileReplay.drop)
+    replays.values.foreach(FileReplay.drop)
 
     // millisecond precision keeps the one-line JSON short enough to
     // survive tail-truncating stdout captures; the full-precision copy
@@ -156,13 +96,19 @@ object Bench {
     val metaJson = streamMeta
       .map { case (row, m) => "\"" + row + "\":" + m.json }
       .mkString("{", ",", "}")
-    try {
+    // a failed write must fail the run: a stale BENCH_FULL.json from an
+    // earlier run would otherwise be read as this run's
+    val wrote = try {
       val full = recorded.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_FULL.json"),
         s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${recorded.size},"errors":$errJson,"canary":$canaryJson,"stream_meta":$metaJson,"queries":$full,"sf":"$sfDir"}""".getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+      true
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] cannot write BENCH_FULL.json: $e")
+      false
+    }
     // compact top-20 summary first (human-readable at a glance); the
     // LAST stdout line carries the FULL per-query map — the driver
     // parses the LAST line, and r14's top-20-last ordering left the
@@ -177,6 +123,119 @@ object Bench {
     println(
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${recorded.size},"errors":$errJson,"canary":$canaryJson,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    if (errors.nonEmpty || !wrote) sys.exit(1)
+  }
+
+  /** One bench row: `run` executes it to completion and returns the
+    * streaming twin's accounting for an `organic_stream_*` row, None
+    * for every other row.
+    */
+  final case class Row(name: String, run: () => Option[StreamTwins.Meta])
+
+  /** A row's wall seconds, its failure if it threw, and a successful
+    * stream row's accounting.
+    */
+  final case class Timing(name: String, seconds: Double,
+      failure: Option[Throwable], meta: Option[StreamTwins.Meta]) {
+    def ok: Boolean = failure.isEmpty
+  }
+
+  /** Every bench row, in bench order: the [[SparkEntry.all]] entries,
+    * the organic rows and the [[StreamTwins]] rows. A stream row writes
+    * its replay dir into `replays` on first run and reuses it after, so
+    * a second pass measures pure stream throughput; the caller drops
+    * the dirs.
+    */
+  def rows(spark: SparkSession, sfDir: String,
+      replays: mutable.Map[String, String]): Seq[Row] = {
+    def row(name: String)(f: => Any): Row = Row(name, () => { f; None })
+    // organic-path timings (r7 verdict #6): the REAL thresholds, not the
+    // planted-twin projections — bench-visible but not oracle entries
+    // (their outputs are engine-internal candidate sets). The *_star
+    // rows are the cluster-feeding star-emission semantic (renamed from
+    // organic_dedup_{minhash,simhash} in r11 when those rows' semantics
+    // changed — recorded series stay self-consistent); *_pairs keep the
+    // verified all-pairs candidate semantic.
+    val organic = Seq(
+      row("organic_dedup_minhash_star")(
+        DedupOps.minhashStarEdges(spark, sfDir).count()),
+      row("organic_dedup_simhash_star")(
+        DedupOps.simhashStarEdges(spark, sfDir).count()),
+      row("organic_dedup_simhash_star_full")(
+        DedupOps.simhashStarEdgesFull(spark, sfDir).count()),
+      row("organic_dedup_minhash_pairs")(
+        DedupOps.minhashPairs(spark, sfDir, planted = false).count()),
+      row("organic_dedup_simhash_pairs")(
+        DedupOps.simhashPairs(spark, sfDir, planted = false).count()),
+      row("organic_dedup_ngram")(
+        DedupOps.ngramJaccardPairs(spark, sfDir, planted = false).count()),
+      row("organic_sim_ivf")(
+        SimilarityOps.ivfTopK(spark, sfDir, planted = false).count()),
+      row("organic_sim_pq")(
+        SimilarityOps.pqTopK(spark, sfDir, planted = false).count()),
+      row("organic_sim_lsh")(
+        SimilarityOps.lshBucket(spark, sfDir, planted = false).count()))
+    val stream = StreamTwins.all.map(t => Row(s"organic_stream_${t.name}",
+      () => Some(StreamTwins.run(spark, sfDir, t, replays))))
+    val kmeans = row("organic_kmeans_fit")(MlOps.kmeansFit(
+      Engine.table(spark, sfDir, "embeddings").selectExpr("vec_id", "embedding"),
+      "vec_id", "embedding", k = 10, iters = 5))
+    SparkEntry.all.map(q => row(q.name)(q.run(spark, sfDir).count())) ++
+      organic ++ stream :+ kmeans
+  }
+
+  /** The rows named in `names`, in that order; all of `rows` when
+    * `names` is empty. Throws IllegalArgumentException naming every
+    * unknown row.
+    */
+  def select(rows: Seq[Row], names: Seq[String]): Seq[Row] =
+    if (names.isEmpty) rows
+    else {
+      val byName = rows.map(r => r.name -> r).toMap
+      val unknown = names.filterNot(byName.contains)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown bench row(s): ${unknown.mkString(" ")}")
+      names.distinct.map(byName)
+    }
+
+  /** Run `row` once, timed. Afterwards, outside the timed region, the
+    * persistent RDDs are released (blocking).
+    */
+  def timed(spark: SparkSession, row: Row): Timing = {
+    val t0 = System.nanoTime()
+    val (failure, meta) =
+      try (None, row.run()) catch { case e: Throwable => (Some(e), None) }
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    // Inter-query hygiene (r15 measurement fix, recorded in
+    // OPTIMIZATION_r15.md): the iterative/multi-pass operators
+    // eagerly checkpoint intermediates whose blocks are only
+    // reclaimed when the ContextCleaner gets around to the GC'd
+    // Datasets — across 275 queries x 2 passes the leaked blocks
+    // compound into storage/GC pressure that inflates every LATER
+    // row (cross-query interference, not that query's cost).
+    // Release them between queries, outside the timed region.
+    // Queries are independent (each invocation rebuilds its own
+    // checkpoints), so dropping finished queries' blocks is safe.
+    // BLOCKING: an async unpersist storm overlaps the NEXT query's
+    // timed region (measured: late-suite rows inflated 1.3-2x while
+    // the warmup-touched canaries got faster).
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    Timing(row.name, elapsed, failure, meta)
+  }
+
+  /** The bench protocol over `rows`: two full passes, min per row ACROSS
+    * passes (over the successful ones if any); a row fails only if both
+    * passes fail, and keeps the accounting of its last successful pass.
+    */
+  def time(spark: SparkSession, rows: Seq[Row]): Seq[Timing] = {
+    val pass1 = rows.map(timed(spark, _))
+    val pass2 = rows.map(timed(spark, _))
+    pass1.zip(pass2).map { case (a, b) =>
+      val good = Seq(a, b).filter(_.ok)
+      val secs = (if (good.nonEmpty) good else Seq(a, b)).map(_.seconds).min
+      Timing(a.name, secs, if (good.nonEmpty) None else b.failure,
+        (a.meta ++ b.meta).lastOption)
+    }
   }
 }

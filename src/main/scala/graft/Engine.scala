@@ -69,7 +69,8 @@ object Engine {
   }
 
   /** Session-level knobs we want regardless of who built the session
-    * (the driver's Verify/Bench mains call this too). Mirrors the
+    * ([[session]] applies them; the SQL front door and the operators
+    * call this again on whatever session they are handed). Mirrors the
     * reference's planner behaviors that are flag-gated in Spark
     * (SURVEY.md section 4.1).
     */
@@ -175,11 +176,21 @@ object Engine {
     * task retries (unlike round-robin, which also pays a local sort
     * per SPARK-23207).
     *
-    * Only call this on scan-level plans (scan + projection/filter/
-    * union, no exchanges): the gate reads `df.rdd.getNumPartitions`,
-    * which under AQE would materialize any shuffle stages below it.
+    * Only scan-level plans are accepted (scans and checkpoints under
+    * projections, filters and unions, no exchanges): the gate reads
+    * `df.rdd.getNumPartitions`, which under AQE would materialize any
+    * shuffle stages below it. Any other node is rejected, by name,
+    * before `df.rdd` is touched.
     */
   def fanOut(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    df.queryExecution.analyzed.foreach {
+      case _: LeafNode | _: Project | _: Filter | _: Union |
+          _: SubqueryAlias | _: View => ()
+      case other => throw new IllegalArgumentException(
+        s"Engine.fanOut needs a scan-level input (scans under " +
+          s"projections, filters and unions); found ${other.nodeName}")
+    }
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 >= target) df
     else df.repartition(target, key)

@@ -235,7 +235,7 @@ object DedupOps {
     * groupBy-reps + join-back alternative reads clean but plans TWO
     * scans + shingle/minhash passes over the corpus: the agg and probe
     * subtrees differ by an isnotnull join-key filter, so AQE exchange
-    * reuse cannot dedup them (probed — StarPlanProbe, REUSED=false).
+    * reuse cannot dedup them (PlanBudgetSpec pins the one scan).
     */
   private def starEdges(bands: DataFrame, bucketCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -954,13 +954,14 @@ object DedupOps {
     // return and GC'd with the Datasets (an explicit unpersist of a
     // LogicalRDD's backing blocks has no public API handle).
     // NOTE (r15, measured): under AQE the checkpoint below reports
-    // UnknownPartitioning (tools/CkptProbe), so the "edges never
-    // re-shuffle across rounds" layout claim did NOT hold — each
-    // round's neighbor join re-exchanges the edge relation. Pinning
-    // the layout (double-checkpoint with AQE off for the pin) removed
-    // the per-round exchange in the plan but measured SLOWER end to
-    // end (dedup_simhash_full 3.8 -> 8.9 s bench; extra
-    // materialization + un-coalesced rounds + block pressure), so the
+    // UnknownPartitioning (NOTES.md "AQE checkpoint partitioning"), so
+    // the "edges never re-shuffle across rounds" layout claim did NOT
+    // hold — each round's neighbor join re-exchanges the edge
+    // relation. Pinning the layout (double-checkpoint with AQE off
+    // for the pin) removed the per-round exchange in the plan but
+    // measured SLOWER end to end (dedup_simhash_full 3.8 -> 8.9 s
+    // bench; extra materialization + un-coalesced rounds + block
+    // pressure), so the
     // checkpoint is kept for what it measurably buys: killing the
     // per-round re-ANALYSIS of the full upstream tree (48 s -> 3.8 s
     // in r14) and lineage growth. The repartition still bounds the

@@ -62,9 +62,10 @@ object GraphOps {
     val e0 = edges.join(deg, "src")
       .select(col("src"), col("dst"), col("deg"))
     // NOTE (r15, measured): under AQE the checkpointed RDD reports
-    // UnknownPartitioning (tools/CkptProbe), so each iteration's rank
-    // join DOES re-exchange the edge relation (~14 MB/round at sf0.1,
-    // visible in the plan as Sort+Exchange over Scan ExistingRDD).
+    // UnknownPartitioning (NOTES.md "AQE checkpoint partitioning"), so
+    // each iteration's rank join DOES re-exchange the edge relation
+    // (~14 MB/round at sf0.1, visible in the plan as Sort+Exchange
+    // over Scan ExistingRDD).
     // Pinning the layout (OPTIMIZATION_r15.md) removed
     // those per-round exchanges in the plan but measured SLOWER
     // end-to-end (graph_pagerank 2.9 -> 8.0 s bench: the extra

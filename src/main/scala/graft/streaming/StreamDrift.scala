@@ -42,5 +42,5 @@ object StreamDrift {
     */
   def driftFromCells(cells: DataFrame): DataFrame =
     graft.operators.StatOps.driftFromDaily(
-      cells.withColumnRenamed("mc", "c").localCheckpoint())
+      graft.Engine.materialize(cells.withColumnRenamed("mc", "c")))
 }

@@ -44,7 +44,7 @@ object StreamHeavyHitters {
     * "aggregate before you shuffle"): every token explodes into 4
     * (row, bucket) increments — hundreds of thousands of 8-byte rows
     * per micro-batch shuffled into the 256-key state operator (r15
-    * StreamProf: the slowest steady-state addBatch of the twins).
+    * per-trigger profile: the slowest steady-state addBatch of the twins).
     * Counting per partition first caps the shuffle at
     * <= 256 rows x map tasks per batch; the state function sums the
     * partial counts, so every cell value — and the batch-equivalence

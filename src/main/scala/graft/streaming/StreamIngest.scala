@@ -66,7 +66,7 @@ object StreamIngest {
     * the default stream-static LEFT ANTI join re-builds its broadcast
     * (collect + hash relation + serialize) EVERY micro-batch — pure
     * fixed per-trigger cost on a side that never changes (r15
-    * StreamProf: ~0.7 s/trigger on a 99k-fp standing side, the
+    * per-trigger profile: ~0.7 s/trigger on a 99k-fp standing side, the
     * slowest-twin profile). Identical semantics to the anti-join
     * (null fps pass, like a null anti-join key); only valid for a
     * STATIC standing side — a maintained standing table needs the

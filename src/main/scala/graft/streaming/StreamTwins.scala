@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.Engine
 
 /** The ten streaming twins' replay rows, defined once: Bench's
-  * `organic_stream_*` rows, `tools/StreamProf` and `tools/ScaleSweep`
-  * iterate [[all]] and drive each entry through [[run]].
+  * `organic_stream_*` rows (which `tools/Profile` also runs) and
+  * `tools/ScaleSweep` iterate [[all]] and drive each entry through
+  * [[run]].
   *
   * A row replays its batch-side source as a [[FileReplay]] dir (8
   * chunks in replay order, one per micro-batch — the driver never
@@ -159,17 +160,18 @@ object StreamTwins {
     // deduped in keyed state. The standing set never changes inside
     // the row, so it is checkpointed once and frozen into ONE broadcast
     // set (snapshotStatic) instead of a per-micro-batch broadcast
-    // rebuild, which StreamProf measured as the slowest per-trigger
-    // fixed cost.
+    // rebuild, which the per-trigger profile measured as the slowest
+    // per-trigger fixed cost.
     Twin("ingest", "ingest", Seq("doc_id"),
       (spark, sfDir) => Engine.table(spark, sfDir, "documents")
         .filter(col("doc_id") % 5 === 0 && col("doc_id") % 97 =!= 0)
         .select(col("doc_id"), col("source"), col("lang"), col("text")),
       (src, sfDir) => {
-        val standing = Engine.table(src.sparkSession, sfDir, "documents")
-          .filter(col("doc_id") % 5 =!= 0)
-          .select(graft.operators.CorpusOps.docFp(col("text")).as("fp"))
-          .distinct().localCheckpoint()
+        val standing = Engine.materialize(
+          Engine.table(src.sparkSession, sfDir, "documents")
+            .filter(col("doc_id") % 5 =!= 0)
+            .select(graft.operators.CorpusOps.docFp(col("text")).as("fp"))
+            .distinct())
         StreamIngest.survivors(src, standing, snapshotStatic = true).toDF()
       },
       "append"))

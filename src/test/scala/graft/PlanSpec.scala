@@ -21,6 +21,30 @@ class PlanSpec extends AnyFunSuite {
   private def run(name: String): DataFrame =
     SparkEntry.queries(name)(spark, TestSpark.sf)
 
+  test("fanOut rejects an input with an exchange below it, before running it") {
+    val agg = Engine.table(spark, TestSpark.sf, "documents")
+      .groupBy(col("source")).count()
+    val sc = spark.sparkContext
+    sc.setJobGroup("fanout-guard", "fanOut guard")
+    val e = try intercept[IllegalArgumentException](
+      Engine.fanOut(agg, col("source")))
+      finally sc.clearJobGroup()
+    assert(e.getMessage.contains("Aggregate"))
+    assert(sc.statusTracker.getJobIdsForGroup("fanout-guard").isEmpty)
+  }
+
+  test("fanOut passes a scan+filter+union input through unchanged") {
+    val docs = Engine.table(spark, TestSpark.sf, "documents")
+      .select(col("doc_id"), col("text"))
+    // every scan is at least one task, so this many union arms reach
+    // half the parallelism and the gate keeps the input as it is
+    val arms = (spark.sparkContext.defaultParallelism + 1) / 2
+    val u = (0 until arms)
+      .map(i => docs.filter(col("doc_id") % arms === i))
+      .reduce(_ unionByName _)
+    assert(Engine.fanOut(u, col("doc_id")) eq u)
+  }
+
   test("filters and column pruning reach the parquet scan (HdfsScanNode conjuncts)") {
     val df = run("scan_filter")
     val scan = df.queryExecution.executedPlan.collect {

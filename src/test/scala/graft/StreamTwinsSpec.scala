@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{FileReplay, StreamDrift, StreamTwins}
 
 /** Every [[StreamTwins]] entry at sf0.001 through [[StreamTwins.run]],
-  * the path Bench's `organic_stream_*` rows, StreamProf and ScaleSweep
+  * the path Bench's `organic_stream_*` rows, Profile and ScaleSweep
   * share: the row completes, every replay chunk is read by exactly one
   * micro-batch (a watermarked twin adds at most one trailing no-data
   * batch that advances the watermark), and the replay loses no source
