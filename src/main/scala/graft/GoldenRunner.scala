@@ -164,14 +164,17 @@ object GoldenRunner {
       got.matches(want.stripPrefix("row_regex:").trim)
     } else got == want
 
+  private val fixtureRef = """\$FIXTURES/([\w.-]+)""".r
+
   def run(spark: SparkSession, sfDir: String, c0: GoldenCase): Option[String] = {
     // the reference's corpus substitutes $FILESYSTEM_PREFIX into its
     // queries; this runner's analog is $WAREHOUSE (the session's
-    // warehouse dir), used by the load.test port to address staged files
-    val c =
-      if (!c0.query.contains("$WAREHOUSE")) c0
-      else c0.copy(query = c0.query.replace("$WAREHOUSE",
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")))
+    // warehouse dir), used by the load.test port to address staged files;
+    // $FIXTURES/<name> names an in-repo fixture file ([[Fixtures.path]])
+    val c = c0.copy(query = fixtureRef.replaceAllIn(
+      c0.query.replace("$WAREHOUSE",
+        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")),
+      m => scala.util.matching.Regex.quoteReplacement(Fixtures.path(m.group(1)))))
     c.catchError match {
       case Some(fragment) =>
         try {

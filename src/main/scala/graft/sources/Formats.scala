@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Engine, Q}
+import graft.{Engine, Fixtures, Q}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -97,7 +97,9 @@ object Formats {
 
   /** Escape-aware delimited text scan (delimited-text.test's
     * comma/backslash fixture, `delimited-text-parser.cc`): the Spark
-    * side parses the reference's own escaped fixture file through
+    * side parses the in-repo fixture `text-comma-backslash-newline.txt`
+    * ([[Fixtures]]; its bytes are the reference values below,
+    * escaped as [[DelimitedText]] documents) through
     * [[DelimitedText.read]]; the oracle is the reference's expected
     * decoded VALUES as constants (DuckDB's CSV reader cannot parse
     * unquoted escapes — the expected rows ARE the published fixture
@@ -116,7 +118,7 @@ object Formats {
         org.apache.spark.sql.types.StructField("f4",
           org.apache.spark.sql.types.IntegerType)))
       DelimitedText.read(s,
-        "/root/reference/testdata/data/text-comma-backslash-newline.txt",
+        Fixtures.path("text-comma-backslash-newline.txt"),
         schema, sep = ',', esc = '\\')
         .orderBy(col("f1"))
     },

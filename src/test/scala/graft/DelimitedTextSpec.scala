@@ -4,11 +4,17 @@ import graft.sources.DelimitedText
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Conformance with the reference's QueryTest/delimited-text.test and
-  * delimited-latin-text.test: expected VALUES are the reference's own,
-  * read from the reference's own fixture files
-  * (testdata/data/text-comma-backslash-newline.txt,
-  * text-dollar-hash-pipe.txt, text-thorn-ecirc-newline.txt).
+/** Conformance with the reference's QueryTest/delimited-text.test,
+  * delimited-latin-text.test and overflow.test: expected VALUES are the
+  * reference's own, read from the in-repo fixtures
+  * (`src/main/resources/fixtures`, resolved by [[Fixtures.path]]):
+  * text-comma-backslash-newline.txt, text-dollar-hash-pipe.txt,
+  * text-thorn-ecirc-newline.txt and overflow.txt. Their bytes are
+  * literal, not produced by [[DelimitedText.write]]: the reference
+  * values below, escaped by the documented rule (an escape makes the
+  * next character literal, sources/DelimitedText.scala), with the
+  * reference files' separators, escapes and terminators (FIXTURES.md
+  * §4).
   *
   * Adaptation (documented in sources/DelimitedText.scala): the latin
   * fixture's 0xFE/0xEA delimiter BYTES decode via Latin-1 into U+00FE /
@@ -22,13 +28,11 @@ class DelimitedTextSpec extends AnyFunSuite {
     StructField("f1", StringType), StructField("f2", StringType),
     StructField("f3", IntegerType), StructField("f4", IntegerType)))
 
-  private val data = "/root/reference/testdata/data"
-
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Int, Int)] =
     df.collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3)))
 
   test("delimited-text.test: fields ',' escaped '\\' lines '\\n'") {
-    val df = DelimitedText.read(spark, s"$data/text-comma-backslash-newline.txt",
+    val df = DelimitedText.read(spark, Fixtures.path("text-comma-backslash-newline.txt"),
       schema, sep = ',', esc = '\\')
     assert(rows(df).sortBy(_._1) === Seq(
       ("one", "two", 3, 4),
@@ -39,7 +43,7 @@ class DelimitedTextSpec extends AnyFunSuite {
   }
 
   test("delimited-text.test: fields '$' escaped '#' lines '|'") {
-    val df = DelimitedText.read(spark, s"$data/text-dollar-hash-pipe.txt",
+    val df = DelimitedText.read(spark, Fixtures.path("text-dollar-hash-pipe.txt"),
       schema, sep = '$', esc = '#', lineSep = "|")
     assert(rows(df).sortBy(_._1) === Seq(
       ("one", "two", 3, 4),
@@ -50,7 +54,7 @@ class DelimitedTextSpec extends AnyFunSuite {
   }
 
   test("delimited-latin-text.test: extended-ASCII thorn/ecirc delimiters") {
-    val df = DelimitedText.read(spark, s"$data/text-thorn-ecirc-newline.txt",
+    val df = DelimitedText.read(spark, Fixtures.path("text-thorn-ecirc-newline.txt"),
       schema, sep = 'þ', esc = 'ê', charset = "ISO-8859-1")
     assert(rows(df).sortBy(_._1) === Seq(
       ("one", "two", 3, 4),
@@ -88,7 +92,7 @@ class DelimitedTextSpec extends AnyFunSuite {
   test("writer emits the reference's exact byte encoding") {
     import spark.implicits._
     // write the comma/backslash fixture's VALUES and compare the file
-    // bytes with the reference's own fixture encoding, line for line
+    // bytes with the fixture's literal encoding, line for line
     val vals = Seq(
       ("one", "two", 3, 4), ("one,one", "two", 3, 4),
       ("one\\", "two", 3, 4), ("one\\,one", "two", 3, 4),
@@ -105,7 +109,7 @@ class DelimitedTextSpec extends AnyFunSuite {
     }
     val ref = {
       val src = scala.io.Source.fromFile(
-        s"$data/text-comma-backslash-newline.txt", "UTF-8")
+        Fixtures.path("text-comma-backslash-newline.txt"), "UTF-8")
       try src.getLines().toList.sorted finally src.close()
     }
     assert(written === ref)
@@ -114,14 +118,15 @@ class DelimitedTextSpec extends AnyFunSuite {
   test("overflow.test: out-of-range text values saturate, never null") {
     // the reference's text scanner clamps integer overflow to the type's
     // min/max and float overflow to +/-Infinity (string-parser.h;
-    // QueryTest/overflow.test over testdata/data/overflow.txt)
+    // QueryTest/overflow.test over the reference's overflow.txt, rebuilt
+    // as fixtures/overflow.txt: one past each bound on the outer rows)
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("a", ByteType), StructField("b", ShortType),
       StructField("c", IntegerType), StructField("d", LongType),
       StructField("e", FloatType), StructField("f", DoubleType)))
     val rows = DelimitedText.read(spark,
-        s"$data/overflow.txt", schema, sep = ',', esc = '\\')
+        Fixtures.path("overflow.txt"), schema, sep = ',', esc = '\\')
       .collect()
       .map(r => (r.getByte(0), r.getShort(1), r.getInt(2), r.getLong(3),
         r.getFloat(4), r.getDouble(5)))
