@@ -7,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Conformance with the reference's QueryTest/delimited-text.test,
   * delimited-latin-text.test and overflow.test: expected VALUES are the
   * reference's own, read from the in-repo fixtures
-  * (`src/main/resources/fixtures`, resolved by [[Fixtures.path]]):
-  * text-comma-backslash-newline.txt, text-dollar-hash-pipe.txt,
-  * text-thorn-ecirc-newline.txt and overflow.txt. Their bytes are
-  * literal, not produced by [[DelimitedText.write]]: the reference
-  * values below, escaped by the documented rule (an escape makes the
-  * next character literal, sources/DelimitedText.scala), with the
-  * reference files' separators, escapes and terminators (FIXTURES.md
-  * §4).
+  * (`src/main/resources/fixtures`, resolved by [[Fixtures.path]]).
+  * text-comma-backslash-newline.txt, text-dollar-hash-pipe.txt and
+  * text-thorn-ecirc-newline.txt are literal bytes, not produced by
+  * [[DelimitedText.write]]: the reference values below, escaped by the
+  * documented rule (an escape makes the next character literal,
+  * sources/DelimitedText.scala), with the reference files' separators,
+  * escapes and terminators. overflow.txt is a constructed boundary
+  * case, not the reference's file (FIXTURES.md §4).
   *
   * Adaptation (documented in sources/DelimitedText.scala): the latin
   * fixture's 0xFE/0xEA delimiter BYTES decode via Latin-1 into U+00FE /
@@ -118,8 +118,9 @@ class DelimitedTextSpec extends AnyFunSuite {
   test("overflow.test: out-of-range text values saturate, never null") {
     // the reference's text scanner clamps integer overflow to the type's
     // min/max and float overflow to +/-Infinity (string-parser.h;
-    // QueryTest/overflow.test over the reference's overflow.txt, rebuilt
-    // as fixtures/overflow.txt: one past each bound on the outer rows)
+    // QueryTest/overflow.test). fixtures/overflow.txt is a constructed
+    // boundary case, not the reference's bytes: the outer rows are one
+    // past each bound (FIXTURES.md §4)
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("a", ByteType), StructField("b", ShortType),
@@ -137,5 +138,30 @@ class DelimitedTextSpec extends AnyFunSuite {
       (1.toByte, 2.toShort, 3, 4L, 5.5f, 6.6),
       (Byte.MaxValue, Short.MaxValue, Int.MaxValue, Long.MaxValue,
         Float.PositiveInfinity, Double.PositiveInfinity)))
+  }
+
+  test("integer text wider than DECIMAL(38,0) saturates by its sign") {
+    // 40-digit literals overflow the DECIMAL(38,0) the integer clamp goes
+    // through; they must still read as the bound of their sign, while a
+    // zero-padded 45-character literal keeps its small value
+    val big = "1" + "0" * 39
+    val dir = java.nio.file.Files.createTempDirectory("graft_delim_wide")
+    val lines = Seq(s"-$big", big, s"+$big", "0" * 43 + "42")
+      .map(v => Seq.fill(4)(v).mkString(","))
+    java.nio.file.Files.write(dir.resolve("wide.txt"),
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val schema = StructType(Seq(
+      StructField("a", ByteType), StructField("b", ShortType),
+      StructField("c", IntegerType), StructField("d", LongType)))
+    val rows = DelimitedText.read(spark, dir.toString, schema,
+        sep = ',', esc = '\\')
+      .collect()
+      .map(r => (r.getByte(0), r.getShort(1), r.getInt(2), r.getLong(3)))
+      .sortBy(_._1)
+    assert(rows.toSeq === Seq(
+      (Byte.MinValue, Short.MinValue, Int.MinValue, Long.MinValue),
+      (42.toByte, 42.toShort, 42, 42L),
+      (Byte.MaxValue, Short.MaxValue, Int.MaxValue, Long.MaxValue),
+      (Byte.MaxValue, Short.MaxValue, Int.MaxValue, Long.MaxValue)))
   }
 }
