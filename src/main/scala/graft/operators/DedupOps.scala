@@ -55,6 +55,11 @@ object DedupOps {
     */
   private[operators] val TwinOffset = 10000000L
 
+  // star-contraction round bound for the dedup cluster passes
+  // (GraphOps.connectedComponents): rounds past the fixpoint stop on
+  // the stable edge-set signature, so the margin costs nothing
+  private[graft] val CcRounds = 20
+
   private def plantTwins(df: DataFrame, idCol: String,
       every: Int): DataFrame =
     df.unionByName(df.filter(col(idCol) % every === 0)
@@ -385,18 +390,18 @@ object DedupOps {
     */
   val simhashFull: Q = Q("dedup_simhash_full",
     (s, d) => {
-      val comps = connectedComponents(
+      val comps = GraphOps.connectedComponents(
         simhashStarEdgesFullOf(simhashBands(s, d, planted = true))
-          .select(col("doc_a").as("a"), col("doc_b").as("b")))
+          .select(col("doc_a").as("x"), col("doc_b").as("y")), CcRounds)
       val base = t(s, d, "documents")
         .filter(col("doc_id") % 20 === 0 &&
           size(call_function("token_hashes", col("text"))) >= 1)
         .select(col("doc_id"))
       base
-        .join(comps.select(col("id").as("doc_id"),
-          col("cluster_id").as("c1")), Seq("doc_id"))
-        .join(comps.select((col("id") - TwinOffset).as("doc_id"),
-          col("cluster_id").as("c2")), Seq("doc_id"))
+        .join(comps.select(col("node").as("doc_id"),
+          col("component").as("c1")), Seq("doc_id"))
+        .join(comps.select((col("node") - TwinOffset).as("doc_id"),
+          col("component").as("c2")), Seq("doc_id"))
         .select(col("doc_id"), (col("c1") === col("c2")).as("twin_linked"))
         .orderBy(col("doc_id"))
     },
@@ -880,164 +885,35 @@ object DedupOps {
     Some("""SELECT vec_id AS id_a, vec_id + 10000000 AS id_b
       |FROM embeddings WHERE vec_id % 20 = 0 ORDER BY id_a""".stripMargin))
 
-  /** Connected components over a near-dup pair set: every document in a
-    * component gets the component's smallest doc id as `cluster_id`, and
-    * `keep = (doc_id == cluster_id)` marks the canonical survivor. This
-    * is the step that turns any pair-producing dedup (exact, MinHash,
-    * SimHash, embedding-cosine) into a keep/drop decision when dup
-    * relations chain (A~B, B~C but not A~C).
-    *
-    * Algorithm: iterative min-label propagation. Each round joins the
-    * current labels across the (symmetrized) edge set and keeps the
-    * smallest label seen — one shuffle per round, no driver-side data.
-    * Rounds needed = component diameter; near-dup components come from
-    * band-bucket joins and are clique-like (diameter 2-3), so the loop
-    * converges in a handful of rounds even at 100 TB. The driver reads
-    * ONE scalar per round (the changed-label count) for the fixpoint
-    * test, same pattern as the IVF k-means fit; labels are cached per
-    * round and unpersisted after use.
-    *
-    * Fault tolerance: per-round materialization defaults to
-    * `localCheckpoint(eager)` — blocks live on executors, so losing an
-    * executor mid-query kills the query (task-level retry within a
-    * round is fine, FaultToleranceSpec). For long-running cluster jobs
-    * set `graft.reliableCheckpoint=true` (see [[Engine.materialize]]):
-    * each round then checkpoints to the reliable store and label
-    * lineage survives executor loss at the cost of one round-trip write
-    * per round.
-    *
-    * Shape note vs [[GraphOps.connectedComponents]]: this hash-min +
-    * double-jump loop is tuned for the dedup band graphs it serves —
-    * clique-like components (O(1) rounds) and the id-ordered chain
-    * worst case (consecutive doc_ids, where pointer jumps genuinely
-    * halve the chain; cc_chain_rounds measures it). On general deep
-    * graphs with arbitrary id placement a jump's target can be a
-    * local min that knows nothing (measured: 28 single-jump rounds on
-    * a diameter-66 tree-ish graph) — the general-graph entry uses
-    * alternating large-star/small-star contraction instead.
+  /** The CHAIN edge set over a documents relation: consecutive doc_ids
+    * within each (source, lang) group, as canonical (x < y) edges —
+    * the adversarial diameter-equals-group-size input for connected
+    * components ([[clusterAssign]], [[survivorQuality]], ScaleSweep).
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val (labels, rounds, converged) =
-      connectedComponentsWithRounds(pairs, maxRounds)
-    require(converged,
-      s"connectedComponents did not converge within $rounds rounds — " +
-        "labels may be wrong; raise maxRounds")
-    labels
+  def chainEdges(docs: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))
+    docs.select(lag(col("doc_id"), 1).over(w).as("x"), col("doc_id").as("y"))
+      .filter(col("x").isNotNull)
   }
 
-  /** [[connectedComponents]] plus the number of propagation rounds and
-    * whether the fixpoint was actually REACHED — the scale-sweep
-    * artifact that turns the "diameter-bounded rounds" claim into a
-    * measurement. `converged = false` means the loop was truncated at
-    * `maxRounds` and the labels may be wrong; `connectedComponents`
-    * throws in that case rather than silently returning them.
-    */
-  def connectedComponentsWithRounds(pairs: DataFrame,
-      maxRounds: Int = 20): (DataFrame, Int, Boolean) = {
-    // materialize each round's working set AND break lineage, so round
-    // N+1's self-referential joins neither re-run the whole history nor
-    // trip ambiguous-self-join
-    // pre-partition the edge set on the probe key: the per-round
-    // neighbor join requires hashpartitioning(b), so the materialized
-    // layout satisfies it and edges never re-shuffle across rounds
-    // (the reference's exchange-once-then-iterate shape; only the
-    // small labels side moves each round). MATERIALIZE — not cache:
-    // a cache shortcuts execution but keeps the full logical tree,
-    // and every per-round Dataset op re-ANALYZES that tree — for a
-    // caller like the full simhash star the edge plan is the whole
-    // banded-dedup pipeline, and the per-round analysis cost dwarfed
-    // the stage time (measured: 48 s wall / 3.8 s stage sum before
-    // the truncation, 80 driver-bound jobs). LogicalRDD keeps the
-    // repartition's outputPartitioning, so the layout contract holds.
-    // Block lifetime is deliberately delegated to the ContextCleaner:
-    // the checkpointed edge/label blocks are unreferenced at function
-    // return and GC'd with the Datasets (an explicit unpersist of a
-    // LogicalRDD's backing blocks has no public API handle).
-    // NOTE (r15, measured): under AQE the checkpoint below reports
-    // UnknownPartitioning (NOTES.md "AQE checkpoint partitioning"), so
-    // the "edges never re-shuffle across rounds" layout claim did NOT
-    // hold — each round's neighbor join re-exchanges the edge
-    // relation. Pinning the layout (double-checkpoint with AQE off
-    // for the pin) removed the per-round exchange in the plan but
-    // measured SLOWER end to end (dedup_simhash_full 3.8 -> 8.9 s
-    // bench; extra materialization + un-coalesced rounds + block
-    // pressure), so the
-    // checkpoint is kept for what it measurably buys: killing the
-    // per-round re-ANALYSIS of the full upstream tree (48 s -> 3.8 s
-    // in r14) and lineage growth. The repartition still bounds the
-    // materialized layout's skew.
-    val edges = Engine.materialize(pairs.select(col("a"), col("b"))
-      .union(pairs.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b")))
-    var labels = Engine.materialize(edges.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster_id")))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      // smallest label among self + neighbors; the self branch also
-      // carries the previous label forward (flagged), so the fixpoint
-      // test is a scan of the materialized round output instead of an
-      // extra shuffle join against the previous labels
-      val self = labels.select(col("id"), col("cluster_id").as("cand"),
-        lit(true).as("is_self"))
-      val viaNeighbor = edges
-        .join(labels.select(col("id").as("nid"),
-          col("cluster_id").as("nlabel")), col("b") === col("nid"))
-        .select(col("a").as("id"), col("nlabel").as("cand"),
-          lit(false).as("is_self"))
-      val minned = self.union(viaNeighbor)
-        .groupBy(col("id"))
-        .agg(min(col("cand")).as("cluster_id"),
-          // exactly one self row per id — min-over-flagged recovers it
-          min(when(col("is_self"), col("cand"))).as("old"))
-      // pointer jumps (label-of-label): each halves the remaining path
-      // length, so chains converge in O(log n) rounds, not O(diameter) —
-      // every label is itself a member id, so the self-lookup always
-      // hits. TWO jumps per round: each jump joins ON the current
-      // cluster_id, and as labels concentrate toward component minima
-      // those join keys become the hot keys of their components — r15
-      // measured FOUR jumps per round at 118 s on dedup_simhash_full
-      // (vs 3.9 s at two): the extra jumps shuffle the labels-sized
-      // intermediate onto ever-fewer distinct keys (guide §2.5 skew),
-      // costing far more than the halved round count saves. Label
-      // validity is jump-count-independent (label-of-label stays a
-      // same-component id), so the fixpoint is unchanged either way.
-      def jump(p: DataFrame): DataFrame = p
-        .join(labels.select(col("id").as("jid"),
-          col("cluster_id").as("jlabel")), col("cluster_id") === col("jid"))
-        .select(p("id"), least(col("cluster_id"), col("jlabel"))
-          .as("cluster_id"), p("old"))
-      val next = Engine.materialize(jump(jump(minned)))
-      // no join: `old` rode along through the round
-      val changed = next.filter(col("cluster_id") =!= col("old")).count()
-      labels = next.select(col("id"), col("cluster_id"))
-      converged = changed == 0
-    }
-    (labels, rounds, converged)
-  }
-
-  /** Cluster assignment over a CHAIN pair set: consecutive doc_ids
-    * within each (source, lang) group. Chains are the adversarial input
-    * for label propagation (diameter = group size, up to ~112 on the
-    * driver data — the pointer-jump rounds earn their keep), and the
-    * fixpoint is independently checkable: a chain connects its whole
-    * group, so cluster_id must equal the group's min doc_id, which
-    * DuckDB expresses as a window min. Real pipelines feed LSH/exact
-    * pairs into the same operator.
+  /** Cluster assignment over a CHAIN pair set ([[chainEdges]]): every
+    * document in a component gets the component's smallest doc id as
+    * `cluster_id`, and `keep = (doc_id == cluster_id)` marks the
+    * canonical survivor — the step that turns any pair-producing dedup
+    * (exact, MinHash, SimHash, embedding-cosine) into a keep/drop
+    * decision when dup relations chain (A~B, B~C but not A~C). Chains
+    * are the adversarial input (diameter = group size, up to ~112 on
+    * the driver data), and the fixpoint is independently checkable: a
+    * chain connects its whole group, so cluster_id must equal the
+    * group's min doc_id, which DuckDB expresses as a window min. Real
+    * pipelines feed LSH/exact pairs into the same operator.
     */
   val clusterAssign: Q = Q("dedup_cluster_assign",
     (s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))
-      val pairs = t(s, d, "documents")
-        .select(col("source"), col("lang"), col("doc_id").as("b"),
-          lag(col("doc_id"), 1).over(w).as("a"))
-        .filter(col("a").isNotNull)
-        .select(col("a"), col("b"))
-      connectedComponents(pairs)
-        .select(col("id").as("doc_id"), col("cluster_id"),
-          (col("id") === col("cluster_id")).as("keep"))
+      GraphOps.connectedComponents(chainEdges(t(s, d, "documents")), CcRounds)
+        .select(col("node").as("doc_id"), col("component").as("cluster_id"),
+          (col("node") === col("component")).as("keep"))
         .orderBy(col("doc_id"))
     },
     Some("""WITH g AS (SELECT source, lang FROM documents
@@ -1077,7 +953,7 @@ object DedupOps {
     * highest quality), not the smallest id — the C4/RefinedWeb recipe.
     * Same chain pair structure as [[clusterAssign]] (so clusters stay
     * oracle-expressible as the (source, lang) groups), clusters from
-    * the real [[connectedComponents]] operator, then the 2-phase
+    * the real [[GraphOps.connectedComponents]] operator, then the 2-phase
     * [[survivorPick]] aggregate chooses the survivor — map-side
     * partials break mega-cluster skew (SurvivorPlanSpec pins no Window
     * in the pick and partial+final aggregation on cluster_id). At
@@ -1088,16 +964,9 @@ object DedupOps {
   val survivorQuality: Q = Q("dedup_survivor",
     (s, d) => {
       val docs = t(s, d, "documents")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))
-      val pairs = docs
-        .select(col("source"), col("lang"), col("doc_id").as("b"),
-          lag(col("doc_id"), 1).over(w).as("a"))
-        .filter(col("a").isNotNull)
-        .select(col("a"), col("b"))
-      val clusters = connectedComponents(pairs)
-        .select(col("id"), col("cluster_id"))
-      val members = docs.join(clusters, col("doc_id") === col("id"))
+      val clusters = GraphOps.connectedComponents(chainEdges(docs), CcRounds)
+        .select(col("node").as("doc_id"), col("component").as("cluster_id"))
+      val members = docs.join(clusters, Seq("doc_id"))
         .select(col("doc_id"), col("cluster_id"), col("n_chars"))
       survivorPick(members)
         .select(col("doc_id"), col("cluster_id"), col("n_chars"), col("keep"))

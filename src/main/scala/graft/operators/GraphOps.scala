@@ -651,10 +651,10 @@ object GraphOps {
     * large-star / small-star algorithm of Kiveris, Lattanzi,
     * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
     * MapReduce and Beyond", SoCC'14 — the published Spark/MapReduce-
-    * native CC with an O(log^2 n) round guarantee) — the exact
-    * clustering primitive under every dedup survivor-selection pass
-    * (DedupOps' star closure is the specialized band-graph instance;
-    * this is the general-graph entry).
+    * native CC with an O(log^2 n) round guarantee) — the engine's one
+    * connected-components operator: [[componentsEntry]] and every
+    * dedup cluster pass (`dedup_cluster_assign`, `dedup_survivor`,
+    * `dedup_simhash_full`) call it.
     *
     * One round is a (large-star, small-star) pair over the canonical
     * (x < y) edge relation:
@@ -665,12 +665,14 @@ object GraphOps {
     *    (and itself) to the min of those smaller neighbors.
     * Both preserve connectivity and node presence; iterated, every
     * component contracts to a STAR centered at its minimum id.
-    * Hash-min propagation was rejected first: it spreads a
-    * component's min ONE hop per round — O(diameter) — and a single
-    * pointer-jump chaser barely helps on tree-shaped regions
-    * (measured: 28 rounds to fixpoint on the sf0.01 co-purchase
-    * graph, diameter ~66, vs 7 star rounds; 400-hop paths take 10
-    * star rounds regardless of id orientation).
+    * Hash-min propagation was rejected: it spreads a component's min
+    * ONE hop per round — O(diameter) — and a single pointer-jump
+    * chaser barely helps on tree-shaped regions (measured: 28 rounds
+    * to fixpoint on the sf0.01 co-purchase graph, diameter ~66, vs 7
+    * star rounds; 400-hop paths take 10 star rounds regardless of id
+    * orientation). Its label joins also multiplied the planner's size
+    * estimate every round (NOTES.md, graph_components); the star's
+    * stays flat.
     *
     * Star rounds are IDEMPOTENT at fixpoint — a star maps to itself
     * under both operations — the kcore/pagerank unroll property the
@@ -686,13 +688,19 @@ object GraphOps {
     * combinable) + one join back keyed by node + distinct — all keyed
     * shuffles, never all-pairs; the edge relation only shrinks under
     * contraction and is checkpointed per round (the pageRank cadence
-    * lesson). High-degree hubs are exactly what large-star is built
+    * lesson) through [[Engine.materialize]], so
+    * `graft.reliableCheckpoint=true` makes every round recoverable
+    * after executor loss (FaultToleranceSpec). High-degree hubs are exactly what large-star is built
     * for: its emissions re-key a hub's larger neighbors to the
     * neighborhood min, splitting the hub's star across keys in the
     * next round.
     *
-    * `edges0`: undirected, x < y, distinct. Returns (node, component)
-    * with component = min node id in the component, ordered by node.
+    * Input contract: `edges0(x, y)` is undirected, canonical (x < y)
+    * and distinct; callers rename their columns to x, y. It is not
+    * checked at runtime — an edge set that breaks it fails the
+    * certificate. Returns (node, component), component = min node id
+    * in the component, one row per node that appears in an edge,
+    * unordered: callers join the labels and order their own output.
     */
   def connectedComponents(edges0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "connectedComponents: rounds >= 1")
@@ -761,7 +769,6 @@ object GraphOps {
         "(star rounds are idempotent past fixpoint, larger is always " +
         "safe)")
     labels.select(col("n").as("node"), col("lbl").as("component"))
-      .orderBy(col("node"))
   }
 
   // (large-star, small-star) pairs: 7 reaches fixpoint on the sf0.01
@@ -815,6 +822,7 @@ object GraphOps {
     (s, d) => {
       Engine.configure(s)
       connectedComponents(coPurchaseEdges(s, d), CcRounds)
+        .orderBy(col("node"))
     },
     Some(ccOracle(CcRounds,
       "WITH li AS (\n" +

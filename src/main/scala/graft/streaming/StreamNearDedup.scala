@@ -25,8 +25,9 @@ import graft.operators.DedupOps
   * SET differs from the batch star (a member links to the min seen AT
   * ARRIVAL, not the global min), but the transitive closure is
   * IDENTICAL for any batch split — the rep chain r1 > r2 > ... links
-  * the generations. Downstream, the same connectedComponents /
-  * survivor selection consumes the edges unchanged.
+  * the generations. Downstream, the same
+  * [[graft.operators.GraphOps.connectedComponents]] / survivor
+  * selection consumes the edges unchanged.
   *
   * 100 TB shape: state is one long per DISTINCT bucket (bounded by
   * band-key ndv, not corpus size — 16 bands x hash space, in practice
@@ -62,8 +63,9 @@ object StreamNearDedup {
   }
 
   /** Star edges over a streaming (doc_id, text) relation. Append-mode
-    * output; feed the collected edges to
-    * [[DedupOps.connectedComponents]] exactly like the batch path.
+    * output (canonical doc_a < doc_b); feed the collected, distinct'd
+    * edges to [[graft.operators.GraphOps.connectedComponents]] exactly
+    * like the batch path.
     */
   def starEdges(docs: DataFrame): Dataset[StarEdge] = {
     val spark = docs.sparkSession

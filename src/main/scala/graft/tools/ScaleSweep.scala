@@ -1,17 +1,17 @@
 package graft.tools
 
 import graft.{Engine, SparkEntry}
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, GraphOps}
 import graft.streaming.{FileReplay, StreamNearDedup, StreamTwins}
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep runner (r10 verdict #4): runs the connected-components
   * dedup entries and the star-emission paths against an N x-replicated
   * corpus (tools/gen_scale_sweep.py) and prints one JSON line per entry
-  * with wall seconds and output rows; for the CC rows it uses
-  * [[DedupOps.connectedComponentsWithRounds]] so the artifact records
-  * rounds-to-converge and the converged flag — the measurement behind
-  * the "diameter-bounded rounds" claim.
+  * with wall seconds and output rows. The CC rows (`cc_chain`,
+  * `cc_minhash_star`) run [[GraphOps.connectedComponents]] with the
+  * dedup passes' round bound [[DedupOps.CcRounds]]; a graph that does
+  * not converge within it fails its certificate and the row throws.
   * The streaming twin rows run each [[StreamTwins]] entry through
   * [[StreamTwins.run]], Bench's own replay path: the corpus is
   * replayed from files and never lands on the driver, so they run at
@@ -36,25 +36,10 @@ object ScaleSweep {
       println(s"""{"entry":"$entry","sec":$s,"rows":$rows$extra,"dir":"$dir"}""")
     }
 
-    // the clusterAssign/survivor chain pair shape: consecutive doc_ids
-    // within each (source, lang) group — the adversarial
-    // diameter-equals-group-size input (queries cite DedupOps.clusterAssign)
-    def chainPairs = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))
-      Engine.table(spark, dir, "documents")
-        .select(col("source"), col("lang"), col("doc_id").as("b"),
-          lag(col("doc_id"), 1).over(w).as("a"))
-        .filter(col("a").isNotNull)
-        .select(col("a"), col("b"))
-    }
-
-    emit("cc_chain_rounds", () => {
-      val (labels, rounds, converged) =
-        DedupOps.connectedComponentsWithRounds(chainPairs)
-      val n = labels.count()
-      (n, s""","rounds":$rounds,"converged":$converged""")
-    })
+    emit("cc_chain", () => (GraphOps.connectedComponents(
+      DedupOps.chainEdges(Engine.table(spark, dir, "documents")),
+      DedupOps.CcRounds)
+      .count(), ""))
     emit("dedup_cluster_assign", () =>
       (SparkEntry.queries("dedup_cluster_assign")(spark, dir).count(), ""))
     emit("dedup_survivor", () =>
@@ -64,14 +49,11 @@ object ScaleSweep {
       val n = edges.count()
       (n, "")
     })
-    emit("cc_minhash_star_rounds", () => {
-      val (labels, rounds, converged) =
-        DedupOps.connectedComponentsWithRounds(
-          DedupOps.minhashStarEdges(spark, dir)
-            .select(col("doc_a").as("a"), col("doc_b").as("b")))
-      val n = labels.count()
-      (n, s""","rounds":$rounds,"converged":$converged""")
-    })
+    emit("cc_minhash_star", () => (GraphOps.connectedComponents(
+      DedupOps.minhashStarEdges(spark, dir)
+        .select(col("doc_a").as("x"), col("doc_b").as("y")),
+      DedupOps.CcRounds)
+      .count(), ""))
     emit("organic_dedup_simhash_star", () =>
       (DedupOps.simhashStarEdges(spark, dir).count(), ""))
     emit("organic_dedup_simhash_star_full", () =>

@@ -3,20 +3,28 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, GraphOps}
 
-/** Connected-components label propagation (dedup cluster assignment). */
+/** Dedup cluster assignment: connected components
+  * ([[GraphOps.connectedComponents]]) over the dedup edge producers.
+  */
 class ClusterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def compsOf(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    GraphOps.connectedComponents(
+      pairs.select(col("doc_a").as("x"), col("doc_b").as("y")),
+      DedupOps.CcRounds)
+      .as[(Long, Long)].collect().toMap
 
   test("chained pairs collapse to one component (multi-hop propagation)") {
     // path graph 1-2-3-4 plus a separate pair 10-11: propagation needs
     // 3 rounds for the path, which a single min-over-neighbors would miss
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-      .toDF("a", "b")
-    val got = DedupOps.connectedComponents(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
+      .toDF("x", "y")
+    val got = GraphOps.connectedComponents(pairs, DedupOps.CcRounds)
+      .orderBy("node").as[(Long, Long)].collect().toSeq
     assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
   }
@@ -38,11 +46,7 @@ class ClusterSpec extends AnyFunSuite {
     val nStar = star.count()
     val nAll = allPairs.count()
     assert(nStar > 0 && nStar <= nAll, s"star=$nStar all=$nAll")
-    def comps(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      DedupOps.connectedComponents(
-        pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-        .as[(Long, Long)].collect().toMap
-    assert(comps(star) === comps(allPairs))
+    assert(compsOf(star) === compsOf(allPairs))
   }
 
   test("star clusters subsume every verified organic pair") {
@@ -50,10 +54,7 @@ class ClusterSpec extends AnyFunSuite {
     // bucket members through the bucket min — so the star components
     // must place both endpoints of EVERY verified pair together (the
     // star path can only merge more, never split a true candidate)
-    val comps = DedupOps.connectedComponents(
-      DedupOps.minhashStarEdges(spark, TestSpark.sf)
-        .select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .as[(Long, Long)].collect().toMap
+    val comps = compsOf(DedupOps.minhashStarEdges(spark, TestSpark.sf))
     val verified = DedupOps.minhashPairs(spark, TestSpark.sf, planted = false)
       .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect()
     assert(verified.nonEmpty)
@@ -62,11 +63,6 @@ class ClusterSpec extends AnyFunSuite {
         s"verified pair ($a,$b) split across star clusters")
     }
   }
-
-  private def compsOf(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-    DedupOps.connectedComponents(
-      pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .as[(Long, Long)].collect().toMap
 
   test("simhash star edges are a subset of the verified pair set (Hamming <= 6)") {
     // unlike the minhash star, every simhash star edge is Hamming-

@@ -168,14 +168,15 @@ class FaultToleranceSpec extends AnyFunSuite {
     // generic SparkException; the operator must reject up front instead.
     // (Registered before the end-to-end case below, which is the only
     // place in the tree that sets the shared session's checkpoint dir.)
-    import graft.operators.DedupOps
+    import graft.operators.{DedupOps, GraphOps}
     import spark.implicits._
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "precondition: no suite may set the checkpoint dir before this test")
     spark.conf.set("graft.reliableCheckpoint", "true")
     try {
       val e = intercept[IllegalArgumentException] {
-        DedupOps.connectedComponents(Seq((1L, 2L)).toDF("a", "b")).count()
+        GraphOps.connectedComponents(Seq((1L, 2L)).toDF("x", "y"),
+          DedupOps.CcRounds).count()
       }
       assert(e.getMessage.contains("setCheckpointDir"), e.getMessage)
     } finally spark.conf.set("graft.reliableCheckpoint", "false")
@@ -186,16 +187,17 @@ class FaultToleranceSpec extends AnyFunSuite {
     // executor loss on long cluster jobs; locally the exercisable analog
     // is a mid-round task kill — the round must retry through the
     // reliable checkpoint store and converge to the same labels
-    import graft.operators.DedupOps
-    // 40 chains of length 50 (diameter 49 — pointer jumps earn their keep)
+    import graft.operators.{DedupOps, GraphOps}
+    // 40 chains of length 50 (diameter 49: several star rounds)
     def chainPairs(slow: Boolean) = {
       val base = spark.range(0, 2000, 1, 8)
         .filter(col("id") % 50 =!= 49)
       (if (slow) base.filter(expr("sleep(1)")) else base)
-        .select(col("id").as("a"), (col("id") + 1).as("b"))
+        .select(col("id").as("x"), (col("id") + 1).as("y"))
     }
     Engine.configure(spark)
-    val clean = DedupOps.connectedComponents(chainPairs(slow = false))
+    val clean = GraphOps.connectedComponents(chainPairs(slow = false),
+        DedupOps.CcRounds)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
@@ -203,7 +205,8 @@ class FaultToleranceSpec extends AnyFunSuite {
     var got: Seq[(Long, Long)] = Nil
     try {
       val kills = withTaskKill("first") {
-        got = DedupOps.connectedComponents(chainPairs(slow = true))
+        got = GraphOps.connectedComponents(chainPairs(slow = true),
+            DedupOps.CcRounds)
           .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       }
       assert(kills == 1, "fault was not injected")

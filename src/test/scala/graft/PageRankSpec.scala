@@ -371,7 +371,7 @@ class PageRankSpec extends AnyFunSuite {
     assert(runLpa(e, 2) == Map(1L -> 1L, 2L -> 2L))
   }
 
-  // ---- connected components (hash-min + pointer jump) --------------
+  // ---- connected components (large-star / small-star) -------------
 
   /** Union-find reference: node -> min id of its component. */
   private def refCc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -421,6 +421,26 @@ class PageRankSpec extends AnyFunSuite {
     // star (hash-min-style propagation is O(n) on one of the two)
     val rev = (0L until 400L).map(i => (400L - i - 1, 400L - i))
     assert(runCc(rev, 10) == want)
+  }
+
+  test("connectedComponents: a 3,000-node path with shuffled ids " +
+    "matches union-find, and the labels' size estimate stays bounded") {
+    // adversarial id placement: neither id orientation lines up with
+    // the path. The estimate pin guards the planner statistics of the
+    // returned labels: a loop whose joins multiply the estimate every
+    // round grows its bit length ~9x per round (hash-min measured 216
+    // -> 13,152,842 bits over 2 -> 12 rounds) and stalls planning
+    // long before any round bound can fail
+    import spark.implicits._
+    val ids = new scala.util.Random(17).shuffle((0L until 3000L).toVector)
+    val path = ids.zip(ids.tail).map { case (a, b) =>
+      (math.min(a, b), math.max(a, b)) }
+    val cc = GraphOps.connectedComponents(
+      path.toDF("x", "y").repartition(4), 20)
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      refCc(path))
+    val bits = cc.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
+    assert(bits < 64, s"labels size estimate is $bits bits")
   }
 
   test("connectedComponents: an insufficient round unroll fails " +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, GraphOps}
 import graft.streaming.StreamNearDedup
 
 /** Streaming MinHash-LSH near-dup: batch equivalence of the stateful
@@ -47,8 +47,9 @@ class StreamNearDedupSpec extends AnyFunSuite {
 
   private def comps(edges: DataFrame): Map[Long, Long] = {
     import spark.implicits._
-    DedupOps.connectedComponents(
-      edges.select(col("doc_a").as("a"), col("doc_b").as("b")).distinct())
+    GraphOps.connectedComponents(
+      edges.select(col("doc_a").as("x"), col("doc_b").as("y")).distinct(),
+      DedupOps.CcRounds)
       .as[(Long, Long)].collect().toMap
   }
 
