@@ -35,9 +35,17 @@ object Engine {
   /** Build a local session with the engine's defaults. Queries coming from
     * the driver reuse whatever session it created; this is for the tests,
     * `Bench`, the tools and the benchmark runner.
+    *
+    * The session carries the physical rule [[graft.plans.HoistLiterals]]:
+    * numeric, date and timestamp constants in filters and projections are
+    * read from the generated class's references instead of being written
+    * into its Java, so statements that differ only in constants reuse
+    * compiled code. (`spark.sql.extensions=graft.GraftExtensions` installs
+    * the same rule on a session built elsewhere.)
     */
   def session(cores: String = "32", appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
+      .withExtensions(graft.plans.HoistLiterals.inject)
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores)
@@ -46,7 +54,8 @@ object Engine {
       .config("spark.sql.session.timeZone", "UTC")
       // static conf; sized to the registry so distinct queries don't
       // evict each other's compiled codegen stages (NOTES round-12
-      // drift attribution — default is 100 entries)
+      // drift attribution — default is 100 entries). HoistLiterals
+      // collapses constants, not distinct query shapes, so this stays.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       // Fork-free local writes. Without the native libhadoop, Spark's

@@ -2,6 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 import graft.{Bench, Engine}
@@ -12,7 +13,11 @@ import graft.streaming.FileReplay
   * the row once to warm codegen, JIT and, for a stream row, the replay
   * dir, then once more under a listener through [[Bench.timed]], and
   * prints wall time, jobs, stages, tasks and the top stages by wall
-  * time with task counts, executor run time and shuffle bytes.
+  * time with task counts, executor run time and shuffle bytes. It also
+  * prints the codegen compiles of both runs and their seconds, read from
+  * `CodegenMetrics` as perfbench's trace reads them: the warm-up run
+  * shows what a first run of the row compiles, the profiled run what a
+  * repeat still compiles.
   *
   * A stream row also prints every micro-batch's durationMs phases
   * (latestOffset / getBatch / queryPlanning / addBatch / walCommit /
@@ -47,12 +52,25 @@ object Profile {
     }
   }
 
+  /** `body`'s result, with the codegen compiles during it and their
+    * seconds: the compile count times the mean of Spark's compile-time
+    * histogram, as perfbench's `codegen.compile_s`.
+    */
+  private def codegen[T](body: => T): (T, Long, Double) = {
+    val ct = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = ct.getCount
+    val r = body
+    val n = ct.getCount - before
+    (r, n, n * ct.getSnapshot.getMean / 1000.0)
+  }
+
   private val phases = Seq("latestOffset", "getBatch", "queryPlanning",
     "addBatch", "walCommit", "commitOffsets", "triggerExecution")
 
   private def profile(spark: org.apache.spark.sql.SparkSession,
       row: Bench.Row): Unit = {
-    Bench.timed(spark, row).failure.foreach(e =>
+    val (warm, warmCompiles, warmCompileS) = codegen(Bench.timed(spark, row))
+    warm.failure.foreach(e =>
       println(s"[${row.name}] warmup failed: ${e.getMessage}"))
     val stages = mutable.ArrayBuffer
       .empty[(Int, String, Int, Long, Long, Long, Long)]
@@ -83,13 +101,15 @@ object Profile {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val run = Bench.timed(spark, row)
+    val (run, compiles, compileS) = codegen(Bench.timed(spark, row))
     Thread.sleep(300) // let the listener bus drain
     sc.removeSparkListener(listener)
     listener.synchronized {
       println(f"== ${row.name} wall=${run.seconds}%.2f s jobs=$jobs " +
         s"stages=${stages.size} tasks=${stages.map(_._3).sum} " +
         s"stageWallSum=${stages.map(_._4).sum}ms")
+      println(f"  codegen compiles=$compiles compile_s=$compileS%.2f " +
+        f"(warm-up run: compiles=$warmCompiles compile_s=$warmCompileS%.2f)")
       run.failure.foreach(e => println(s"  FAILED: ${e.getMessage}"))
       stages.sortBy(-_._4).take(12).foreach {
         case (id, nm, tasks, w, sr, sw, exec) =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark.withConf
 
 /** Bucketed co-located join: the shuffle-elimination pattern for
   * repeatedly-joined big tables (SURVEY design rules). Writing both
@@ -80,15 +81,6 @@ class BucketingSpec extends AnyFunSuite {
       // SelectedBucketsCount appears once bucket pruning kicks in
       val meta = scan.metadata.get("SelectedBucketsCount")
       assert(meta.exists(_.contains("1 out of 8")), s"bucket pruning missing: $meta")
-    }
-  }
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val olds = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }
