@@ -100,8 +100,6 @@ object BlockBloom {
     bb.array()
   }
 
-  def deserializeLogSpace(bytes: Array[Byte]): Int = bytes(0).toInt
-
   def deserializeDir(bytes: Array[Byte]): Array[Long] = {
     val n = (bytes.length - 1) / 8
     val out = new Array[Long](n)

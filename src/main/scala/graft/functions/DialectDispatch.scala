@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseCount, BitwiseOr, Cast, Expression, Literal, Pmod, Round, RuntimeReplaceable, ShiftLeft, ShiftRightUnsigned, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, BitwiseCount, BitwiseOr, Cast, Expression, Literal, Pmod, Round, RuntimeReplaceable, ShiftLeft, ShiftRightUnsigned, Subtract, TimeZoneAwareExpression}
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 
@@ -87,12 +87,36 @@ case class DialectCountSet(left: Expression, right: Expression)
   * on TIMESTAMP and accept either a day count or an INTERVAL expression
   * (`fe/.../analysis/ArithmeticExpr.java` TIMESTAMP arithmetic); Spark's
   * builtins are DATE-typed and integer-only. Dispatch on the resolved
-  * right-hand type.
+  * right-hand type. A DATE first argument answers like Spark: a day
+  * count like its `date_add`/`date_sub` (a DATE), an interval like
+  * `d + interval`/`d - interval`.
   */
 case class DialectDateAdd(left: Expression, right: Expression, sign: Int)
     extends RuntimeReplaceable with BinaryLike[Expression] {
 
-  override lazy val replacement: Expression = right.dataType match {
+  override lazy val replacement: Expression =
+    if (left.dataType == DateType) onDate else onTimestamp
+
+  /** Spark's own datetime arithmetic, resolved here with the session
+    * time zone bound: the analyzer rules that normally do both have
+    * already run when a replacement is materialized.
+    */
+  private def onDate: Expression = {
+    val r = right.dataType match {
+      case _: YearMonthIntervalType | _: DayTimeIntervalType |
+          CalendarIntervalType => right
+      case _ => Cast(right, IntegerType)
+    }
+    val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
+    org.apache.spark.sql.catalyst.analysis.BinaryArithmeticWithDatetimeResolver
+      .resolve(if (sign >= 0) Add(left, r) else Subtract(left, r))
+      .transform {
+        case e: TimeZoneAwareExpression if e.timeZoneId.isEmpty =>
+          e.withTimeZone(tz)
+      }
+  }
+
+  private def onTimestamp: Expression = right.dataType match {
     // year-month intervals take their own physical op (TimestampAddInterval
     // only accepts day-time/calendar intervals — the analyzer sugar that
     // normally routes this is ResolveBinaryArithmetic, which does not

@@ -418,12 +418,12 @@ object MultimodalOps {
       height: Int, rw: Int, rh: Int, mean_r: Double, mean_g: Double,
       mean_b: Double)
 
-  /** Deterministic 8x8 PPM payload for a document id: pixel channels
-    * are modular-arithmetic functions of (id, x, y), so an oracle can
+  /** Deterministic RGB raster for a document id: pixel channels are
+    * modular-arithmetic functions of (id, x, y), so an oracle can
     * recompute what the decode pipeline must observe WITHOUT parsing
-    * image bytes.
+    * image bytes. Every synthetic image payload encodes this raster.
     */
-  def ppmPayload(docId: Long, w: Int, h: Int): Array[Byte] = {
+  def rgbRaster(docId: Long, w: Int, h: Int): RawImage.Image = {
     val rgb = new Array[Byte](w * h * 3)
     var y = 0
     while (y < h) {
@@ -437,8 +437,56 @@ object MultimodalOps {
       }
       y += 1
     }
-    RawImage.encodePpm(RawImage.Image(w, h, rgb))
+    RawImage.Image(w, h, rgb)
   }
+
+  /** The [[rgbRaster]] formula as a binary PPM. */
+  def ppmPayload(docId: Long, w: Int, h: Int): Array[Byte] =
+    RawImage.encodePpm(rgbRaster(docId, w, h))
+
+  /** Oracle of the entries that decode an 8x8 [[rgbRaster]] payload,
+    * resize it to 4x4 and take per-channel means: the means come
+    * straight from the pixel formula (resized pixel (x,y) samples
+    * source (2x,2y)).
+    */
+  private def rgbMeansOracle(format: String): Option[String] =
+    Some(s"""SELECT d.doc_id,
+      |  '$format' AS format,
+      |  CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
+      |  CAST(4 AS INT) AS rw, CAST(4 AS INT) AS rh,
+      |  SUM((d.doc_id * 31 + (2 * x) * 7 + (2 * y) * 13) % 256) / 16.0
+      |    AS mean_r,
+      |  SUM((d.doc_id * 17 + (2 * x) * 11 + (2 * y) * 3) % 256) / 16.0
+      |    AS mean_g,
+      |  SUM((d.doc_id * 5 + (2 * x) * 2 + (2 * y) * 23) % 256) / 16.0
+      |    AS mean_b
+      |FROM documents d, range(0, 4) tx(x), range(0, 4) ty(y)
+      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin)
+
+  /** The shared body of the compressed-image decode entries: encode an
+    * 8x8 [[rgbRaster]] per document, sniff + route it through
+    * [[decodeAny]], decode it with the format's own codec, resize to
+    * 4x4, per-channel means.
+    */
+  private def rgbMeansEntry(name: String, format: String,
+      payload: Long => Array[Byte],
+      decode: Array[Byte] => RawImage.Image): Q =
+    Q(name,
+      (s, d) => {
+        Engine.configure(s)
+        import s.implicits._
+        docIds(s, d).mapPartitions { it =>
+          it.map { id =>
+            val p = payload(id)
+            val (fmt, w, h, _) = decodeAny(p)
+            require(fmt == format, s"sniff routed $fmt")
+            val small = RawImage.resizeNearest(decode(p), 4, 4)
+            val (mr, mg, mb) = RawImage.meanRgb(small)
+            DecodedStats(id, fmt, w, h, small.width, small.height, mr, mg, mb)
+          }
+        }.toDF().orderBy(col("doc_id"))
+      },
+      rgbMeansOracle(format))
 
   /** REAL decode pipeline, oracle-checked end to end: encode an 8x8
     * binary PPM per document (RawImage.encodePpm), sniff + decode it
@@ -467,39 +515,14 @@ object MultimodalOps {
         }
       }.toDF().orderBy(col("doc_id"))
     },
-    Some("""SELECT d.doc_id,
-      |  'image/ppm' AS format,
-      |  CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-      |  CAST(4 AS INT) AS rw, CAST(4 AS INT) AS rh,
-      |  SUM((d.doc_id * 31 + (2 * x) * 7 + (2 * y) * 13) % 256) / 16.0
-      |    AS mean_r,
-      |  SUM((d.doc_id * 17 + (2 * x) * 11 + (2 * y) * 3) % 256) / 16.0
-      |    AS mean_g,
-      |  SUM((d.doc_id * 5 + (2 * x) * 2 + (2 * y) * 23) % 256) / 16.0
-      |    AS mean_b
-      |FROM documents d, range(0, 4) tx(x), range(0, 4) ty(y)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+    rgbMeansOracle("image/ppm"))
 
-  /** Deterministic PNG payload: the [[ppmPayload]] pixel formula run
+  /** Deterministic PNG payload: the [[rgbRaster]] pixel formula run
     * through the real zlib+filter encoder (filters cycle by row, so
     * decoding exercises all five reconstruction paths).
     */
-  def pngPayload(docId: Long, w: Int, h: Int): Array[Byte] = {
-    val rgb = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val i = (y * w + x) * 3
-        rgb(i) = ((docId * 31 + x * 7 + y * 13) % 256).toByte
-        rgb(i + 1) = ((docId * 17 + x * 11 + y * 3) % 256).toByte
-        rgb(i + 2) = ((docId * 5 + x * 2 + y * 23) % 256).toByte
-        x += 1
-      }
-      y += 1
-    }
-    RawPng.encode(RawImage.Image(w, h, rgb))
-  }
+  def pngPayload(docId: Long, w: Int, h: Int): Array[Byte] =
+    RawPng.encode(rgbRaster(docId, w, h))
 
   /** REAL compressed decode, oracle-checked end to end: encode an 8x8
     * PNG per document (zlib deflate + per-row filters 0-4), sniff +
@@ -510,56 +533,15 @@ object MultimodalOps {
     * decodable with JDK-only parts; lossless WebP decodes through
     * [[RawWebp]] (multimodal_decode_webp), lossy JPEG spec-checks only.
     */
-  val decodePng: Q = Q("multimodal_decode_png",
-    (s, d) => {
-      Engine.configure(s)
-      import s.implicits._
-      val ids = docIds(s, d)
-      ids.mapPartitions { it =>
-        it.map { id =>
-          val payload = pngPayload(id, 8, 8)
-          val (fmt, w, h, _) = decodeAny(payload)
-          require(fmt == "image/png", s"sniff routed $fmt")
-          val img = RawPng.decode(payload)
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          DecodedStats(id, fmt, w, h, small.width, small.height, mr, mg, mb)
-        }
-      }.toDF().orderBy(col("doc_id"))
-    },
-    Some("""SELECT d.doc_id,
-      |  'image/png' AS format,
-      |  CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-      |  CAST(4 AS INT) AS rw, CAST(4 AS INT) AS rh,
-      |  SUM((d.doc_id * 31 + (2 * x) * 7 + (2 * y) * 13) % 256) / 16.0
-      |    AS mean_r,
-      |  SUM((d.doc_id * 17 + (2 * x) * 11 + (2 * y) * 3) % 256) / 16.0
-      |    AS mean_g,
-      |  SUM((d.doc_id * 5 + (2 * x) * 2 + (2 * y) * 23) % 256) / 16.0
-      |    AS mean_b
-      |FROM documents d, range(0, 4) tx(x), range(0, 4) ty(y)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+  val decodePng: Q = rgbMeansEntry("multimodal_decode_png", "image/png",
+    pngPayload(_, 8, 8), RawPng.decode)
 
-  /** Deterministic lossless-WebP payload: the [[ppmPayload]] pixel
+  /** Deterministic lossless-WebP payload: the [[rgbRaster]] pixel
     * formula through the real VP8L encoder (prefix-coded literals +
     * LZ77 runs, RawWebp).
     */
-  def webpPayload(docId: Long, w: Int, h: Int): Array[Byte] = {
-    val rgb = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val i = (y * w + x) * 3
-        rgb(i) = ((docId * 31 + x * 7 + y * 13) % 256).toByte
-        rgb(i + 1) = ((docId * 17 + x * 11 + y * 3) % 256).toByte
-        rgb(i + 2) = ((docId * 5 + x * 2 + y * 23) % 256).toByte
-        x += 1
-      }
-      y += 1
-    }
-    RawWebp.encode(RawImage.Image(w, h, rgb))
-  }
+  def webpPayload(docId: Long, w: Int, h: Int): Array[Byte] =
+    RawWebp.encode(rgbRaster(docId, w, h))
 
   /** REAL WebP-lossless decode, oracle-checked end to end: encode an
     * 8x8 VP8L stream per document (RawWebp — canonical prefix codes +
@@ -572,35 +554,8 @@ object MultimodalOps {
     * hash-fails. Lossy VP8 decodes for real too ([[RawVp8]], Vp8Spec
     * conformance); only WebP animation remains out of scope.
     */
-  val decodeWebp: Q = Q("multimodal_decode_webp",
-    (s, d) => {
-      Engine.configure(s)
-      import s.implicits._
-      val ids = docIds(s, d)
-      ids.mapPartitions { it =>
-        it.map { id =>
-          val payload = webpPayload(id, 8, 8)
-          val (fmt, w, h, _) = decodeAny(payload)
-          require(fmt == "image/webp", s"sniff routed $fmt")
-          val img = RawWebp.decode(payload)
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          DecodedStats(id, fmt, w, h, small.width, small.height, mr, mg, mb)
-        }
-      }.toDF().orderBy(col("doc_id"))
-    },
-    Some("""SELECT d.doc_id,
-      |  'image/webp' AS format,
-      |  CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-      |  CAST(4 AS INT) AS rw, CAST(4 AS INT) AS rh,
-      |  SUM((d.doc_id * 31 + (2 * x) * 7 + (2 * y) * 13) % 256) / 16.0
-      |    AS mean_r,
-      |  SUM((d.doc_id * 17 + (2 * x) * 11 + (2 * y) * 3) % 256) / 16.0
-      |    AS mean_g,
-      |  SUM((d.doc_id * 5 + (2 * x) * 2 + (2 * y) * 23) % 256) / 16.0
-      |    AS mean_b
-      |FROM documents d, range(0, 4) tx(x), range(0, 4) ty(y)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+  val decodeWebp: Q = rgbMeansEntry("multimodal_decode_webp", "image/webp",
+    webpPayload(_, 8, 8), RawWebp.decode)
 
   /** Deterministic LOSSY-VP8 payload: 4x4-block-constant planes from a
     * doc_id formula through the engine's own DC-only VP8 encoder
@@ -771,18 +726,7 @@ object MultimodalOps {
     },
     // identical decoded stats to multimodal_decode_png — the transcode
     // must be lossless for the resampled raster
-    Some("""SELECT d.doc_id,
-      |  'image/png' AS format,
-      |  CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-      |  CAST(4 AS INT) AS rw, CAST(4 AS INT) AS rh,
-      |  SUM((d.doc_id * 31 + (2 * x) * 7 + (2 * y) * 13) % 256) / 16.0
-      |    AS mean_r,
-      |  SUM((d.doc_id * 17 + (2 * x) * 11 + (2 * y) * 3) % 256) / 16.0
-      |    AS mean_g,
-      |  SUM((d.doc_id * 5 + (2 * x) * 2 + (2 * y) * 23) % 256) / 16.0
-      |    AS mean_b
-      |FROM documents d, range(0, 4) tx(x), range(0, 4) ty(y)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+    rgbMeansOracle("image/png"))
 
   /** Real Y4M frame sampling under the driver gate: y4mPayload streams
     * through [[sampleFrames]]'s codec path (every 2nd decoded luma
@@ -821,42 +765,29 @@ object MultimodalOps {
       mean_abs: Double, sum_sq: Long)
 
   /** Deterministic PCM16 clip for a document id (the audio twin of
-    * [[ppmPayload]]): sample_i = (id*7919 + i*31) mod 2^16 - 2^15.
+    * [[rgbRaster]]): sample_i = (id*7919 + i*31) mod 2^16 - 2^15. Every
+    * synthetic audio payload encodes this clip.
     */
-  def wavPayload(docId: Long, n: Int, rate: Int): Array[Byte] = {
+  def pcmClip(docId: Long, n: Int, rate: Int): RawAudio.Clip = {
     val samples = new Array[Short](n)
     var i = 0
     while (i < n) {
       samples(i) = ((docId * 7919 + i * 31) % 65536 - 32768).toShort
       i += 1
     }
-    RawAudio.encodeWav(RawAudio.Clip(rate, 1, samples))
+    RawAudio.Clip(rate, 1, samples)
   }
 
-  /** REAL audio decode, oracle-checked like [[decodePpm]]: a RIFF/PCM16
-    * WAV per document, decoded back through RawAudio (header walk,
-    * little-endian samples), amplitude stats as exact integer sums. The
-    * oracle recomputes them from the sample formula.
+  /** The [[pcmClip]] formula as a RIFF/PCM16 WAV. */
+  def wavPayload(docId: Long, n: Int, rate: Int): Array[Byte] =
+    RawAudio.encodeWav(pcmClip(docId, n, rate))
+
+  /** Oracle of the lossless audio entries: amplitude stats of an
+    * 800-sample 16 kHz [[pcmClip]], recomputed from the sample formula.
     */
-  val decodeWav: Q = Q("multimodal_decode_wav",
-    (s, d) => {
-      Engine.configure(s)
-      import s.implicits._
-      val ids = docIds(s, d)
-      ids.mapPartitions { it =>
-        it.map { id =>
-          val payload = wavPayload(id, 800, 16000)
-          val fmt = RawAudio.sniff(payload)
-          val clip = RawAudio.decodeWav(payload)
-          val n = clip.samples.length
-          val (sumAbs, sumSq) = RawAudio.amplitudeStats(clip)
-          AudioStats(id, fmt, clip.sampleRate, clip.channels, n,
-            n * 1000 / clip.sampleRate, sumAbs.toDouble / n, sumSq)
-        }
-      }.toDF().orderBy(col("doc_id"))
-    },
-    Some("""SELECT d.doc_id,
-      |  'audio/wav' AS format,
+  private def pcmStatsOracle(format: String): Option[String] =
+    Some(s"""SELECT d.doc_id,
+      |  '$format' AS format,
       |  CAST(16000 AS INT) AS sample_rate,
       |  CAST(1 AS INT) AS channels,
       |  CAST(800 AS INT) AS n_samples,
@@ -867,22 +798,51 @@ object MultimodalOps {
       |         * ((d.doc_id * 7919 + i * 31) % 65536 - 32768)) AS BIGINT)
       |    AS sum_sq
       |FROM documents d, range(0, 800) t(i)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin)
+
+  /** The shared body of the audio decode entries: synthesize each
+    * document's payload, check its sniff, decode it to PCM16 and
+    * reduce it to exact integer amplitude stats.
+    */
+  private def audioStatsEntry(name: String, format: String,
+      payload: Long => Array[Byte], sniff: Array[Byte] => Boolean,
+      decode: Array[Byte] => RawAudio.Clip, oracle: Option[String]): Q =
+    Q(name,
+      (s, d) => {
+        Engine.configure(s)
+        import s.implicits._
+        docIds(s, d).mapPartitions { it =>
+          it.map { id =>
+            val p = payload(id)
+            require(sniff(p), s"$format sniff failed")
+            val clip = decode(p)
+            val n = clip.samples.length
+            val (sumAbs, sumSq) = RawAudio.amplitudeStats(clip)
+            AudioStats(id, format, clip.sampleRate, clip.channels, n,
+              n * 1000 / clip.sampleRate, sumAbs.toDouble / n, sumSq)
+          }
+        }.toDF().orderBy(col("doc_id"))
+      },
+      oracle)
+
+  private def isWav(p: Array[Byte]): Boolean = RawAudio.sniff(p) == "audio/wav"
+
+  /** REAL audio decode, oracle-checked like [[decodePpm]]: a RIFF/PCM16
+    * WAV per document, decoded back through RawAudio (header walk,
+    * little-endian samples), amplitude stats as exact integer sums. The
+    * oracle recomputes them from the sample formula.
+    */
+  val decodeWav: Q = audioStatsEntry("multimodal_decode_wav", "audio/wav",
+    wavPayload(_, 800, 16000), isWav, RawAudio.decodeWav,
+    pcmStatsOracle("audio/wav"))
 
   /** Deterministic FLAC payload: the [[wavPayload]] sample formula
     * through the real FLAC encoder (fixed predictors + rice coding,
     * [[RawFlac]]; block size 256 so multi-frame streams occur at
     * n=800).
     */
-  def flacPayload(docId: Long, n: Int, rate: Int): Array[Byte] = {
-    val samples = new Array[Short](n)
-    var i = 0
-    while (i < n) {
-      samples(i) = ((docId * 7919 + i * 31) % 65536 - 32768).toShort
-      i += 1
-    }
-    RawFlac.encode(RawAudio.Clip(rate, 1, samples), blockSize = 256)
-  }
+  def flacPayload(docId: Long, n: Int, rate: Int): Array[Byte] =
+    RawFlac.encode(pcmClip(docId, n, rate), blockSize = 256)
 
   /** REAL compressed-audio decode, oracle-checked end to end: a FLAC
     * stream per document (RawFlac — rice-coded fixed-predictor
@@ -893,36 +853,9 @@ object MultimodalOps {
     * rice- or CRC-level bug hash-fails. The audio twin of
     * [[decodeWebp]]; MP3 stays behind the stub (no JVM decode path).
     */
-  val decodeFlac: Q = Q("multimodal_decode_flac",
-    (s, d) => {
-      Engine.configure(s)
-      import s.implicits._
-      val ids = docIds(s, d)
-      ids.mapPartitions { it =>
-        it.map { id =>
-          val payload = flacPayload(id, 800, 16000)
-          require(RawFlac.sniff(payload), "flac sniff failed")
-          val clip = RawFlac.toClip(RawFlac.decode(payload))
-          val n = clip.samples.length
-          val (sumAbs, sumSq) = RawAudio.amplitudeStats(clip)
-          AudioStats(id, "audio/flac", clip.sampleRate, clip.channels, n,
-            n * 1000 / clip.sampleRate, sumAbs.toDouble / n, sumSq)
-        }
-      }.toDF().orderBy(col("doc_id"))
-    },
-    Some("""SELECT d.doc_id,
-      |  'audio/flac' AS format,
-      |  CAST(16000 AS INT) AS sample_rate,
-      |  CAST(1 AS INT) AS channels,
-      |  CAST(800 AS INT) AS n_samples,
-      |  CAST(50 AS INT) AS duration_ms,
-      |  SUM(ABS((d.doc_id * 7919 + i * 31) % 65536 - 32768)) / 800.0
-      |    AS mean_abs,
-      |  CAST(SUM(((d.doc_id * 7919 + i * 31) % 65536 - 32768)
-      |         * ((d.doc_id * 7919 + i * 31) % 65536 - 32768)) AS BIGINT)
-      |    AS sum_sq
-      |FROM documents d, range(0, 800) t(i)
-      |GROUP BY d.doc_id ORDER BY doc_id""".stripMargin))
+  val decodeFlac: Q = audioStatsEntry("multimodal_decode_flac", "audio/flac",
+    flacPayload(_, 800, 16000), RawFlac.sniff,
+    p => RawFlac.toClip(RawFlac.decode(p)), pcmStatsOracle("audio/flac"))
 
   final case class G711Stats(doc_id: Long, format: String,
       sample_rate: Int, channels: Int, n_samples: Int, duration_ms: Int,
@@ -945,13 +878,7 @@ object MultimodalOps {
       val ids = docIds(s, d)
       ids.mapPartitions { it =>
         it.map { id =>
-          val pcm = new Array[Short](800)
-          var i = 0
-          while (i < 800) {
-            pcm(i) = ((id * 7919 + i * 31) % 65536 - 32768).toShort
-            i += 1
-          }
-          val clip = RawAudio.Clip(16000, 1, pcm)
+          val clip = pcmClip(id, 800, 16000)
           val muWav = RawAudio.encodeWavG711(clip, mulaw = true)
           val alWav = RawAudio.encodeWavG711(clip, mulaw = false)
           require(RawAudio.sniff(muWav) == "audio/wav", "g711 sniff failed")
@@ -1164,30 +1091,10 @@ object MultimodalOps {
     * step-table, sign-, clamp- or block-framing bug hash-fails.
     * BlockAlign 16 -> 25 samples/block, 32 whole blocks at n=800.
     */
-  val decodeAdpcm: Q = Q("multimodal_decode_adpcm",
-    (s, d) => {
-      Engine.configure(s)
-      import s.implicits._
-      val ids = docIds(s, d)
-      ids.mapPartitions { it =>
-        it.map { id =>
-          val pcm = new Array[Short](800)
-          var i = 0
-          while (i < 800) {
-            pcm(i) = ((id * 7919 + i * 31) % 65536 - 32768).toShort
-            i += 1
-          }
-          val wav = RawAdpcm.encodeWav(
-            RawAudio.Clip(16000, 1, pcm), blockAlign = 16)
-          require(RawAudio.sniff(wav) == "audio/wav", "adpcm sniff failed")
-          val clip = RawAdpcm.decodeWav(wav)
-          val n = clip.samples.length
-          val (sumAbs, sumSq) = RawAudio.amplitudeStats(clip)
-          AudioStats(id, "audio/adpcm", clip.sampleRate, clip.channels, n,
-            n * 1000 / clip.sampleRate, sumAbs.toDouble / n, sumSq)
-        }
-      }.toDF().orderBy(col("doc_id"))
-    },
+  val decodeAdpcm: Q = audioStatsEntry("multimodal_decode_adpcm",
+    "audio/adpcm",
+    id => RawAdpcm.encodeWav(pcmClip(id, 800, 16000), blockAlign = 16),
+    isWav, RawAudio.decodeWav,
     Some("""WITH RECURSIVE st AS (
       |  SELECT d.doc_id, -1 AS i, 0 AS pred, 0 AS idx,
       |         CAST(0 AS BIGINT) AS sum_abs, CAST(0 AS BIGINT) AS sum_sq

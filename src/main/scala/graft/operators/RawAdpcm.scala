@@ -92,8 +92,7 @@ object RawAdpcm {
       val base = b * blockAlign
       val s0 = samples(b * spb).toInt
       st.predictor = s0 // header seeds the decoder verbatim
-      out(base) = (s0 & 0xff).toByte
-      out(base + 1) = ((s0 >> 8) & 0xff).toByte
+      RawBytes.putLe16(out, base, s0)
       out(base + 2) = st.index.toByte
       out(base + 3) = 0
       var i = 1
@@ -120,8 +119,7 @@ object RawAdpcm {
     var o = 0
     while (o < nSamples) {
       val base = b * blockAlign
-      st.predictor =
-        (((data(base + 1) & 0xff) << 8) | (data(base) & 0xff)).toShort.toInt
+      st.predictor = RawBytes.le16(data, base).toShort.toInt
       st.index = math.max(0, math.min(88, data(base + 2) & 0xff))
       out(o) = st.predictor.toShort
       o += 1
@@ -144,61 +142,14 @@ object RawAdpcm {
     */
   def encodeWav(clip: RawAudio.Clip, blockAlign: Int): Array[Byte] = {
     require(clip.channels == 1, "mono ADPCM only")
-    val data = encodeBlocks(clip.samples, blockAlign)
     val spb = (blockAlign - 4) * 2 + 1
-    val out = new Array[Byte](12 + 8 + 20 + 8 + 4 + 8 + data.length)
-    def putStr(off: Int, s: String): Unit =
-      s.getBytes("US-ASCII").zipWithIndex.foreach { case (c, i) => out(off + i) = c }
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putStr(0, "RIFF"); putLe32(4, out.length - 8); putStr(8, "WAVE")
-    putStr(12, "fmt "); putLe32(16, 20); putLe16(20, 0x11)
-    putLe16(22, 1); putLe32(24, clip.sampleRate)
-    putLe32(28, clip.sampleRate * blockAlign / spb) // approx byte rate
-    putLe16(32, blockAlign); putLe16(34, 4) // bits per sample
-    putLe16(36, 2); putLe16(38, spb) // cbSize, samplesPerBlock
-    putStr(40, "fact"); putLe32(44, 4); putLe32(48, clip.samples.length)
-    putStr(52, "data"); putLe32(56, data.length)
-    System.arraycopy(data, 0, out, 60, data.length)
-    out
-  }
-
-  /** Reader for [[encodeWav]]'s layout (tag 0x0011, mono). */
-  def decodeWav(p: Array[Byte]): RawAudio.Clip = {
-    require(RawAudio.sniff(p) == "audio/wav", "not a WAV")
-    var off = 12
-    var rate = 0; var blockAlign = 0; var nSamples = -1
-    var dataOff = -1; var dataSize = -1
-    def le32(o: Int): Int =
-      (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8) |
-        ((p(o + 2) & 0xff) << 16) | ((p(o + 3) & 0xff) << 24)
-    def le16(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-    while (off + 8 <= p.length) {
-      val id = new String(p, off, 4, "US-ASCII")
-      val size = le32(off + 4)
-      id match {
-        case "fmt " =>
-          require(le16(off + 8) == 0x11, "not IMA ADPCM")
-          require(le16(off + 10) == 1, "mono ADPCM only")
-          rate = le32(off + 12)
-          blockAlign = le16(off + 20)
-        case "fact" => nSamples = le32(off + 8)
-        case "data" => dataOff = off + 8; dataSize = size
-        case _ => ()
-      }
-      off += 8 + size + (size & 1)
-    }
-    require(dataOff >= 0 && rate > 0 && blockAlign > 0, "missing chunks")
-    val spb = (blockAlign - 4) * 2 + 1
-    val n = if (nSamples >= 0) nSamples else dataSize / blockAlign * spb
-    val block = new Array[Byte](dataSize)
-    System.arraycopy(p, dataOff, block, 0, dataSize)
-    RawAudio.Clip(rate, 1, decodeBlocks(block, blockAlign, n))
+    val fact = new Array[Byte](4)
+    RawBytes.putLe32(fact, 0, clip.samples.length)
+    RawBytes.riff("WAVE",
+      "fmt " -> RawAudio.fmtChunk(0x11, 1, clip.sampleRate,
+        clip.sampleRate * blockAlign / spb, // approx byte rate
+        blockAlign, 4, 2, spb), // bits per sample; cbSize, samplesPerBlock
+      "fact" -> fact,
+      "data" -> encodeBlocks(clip.samples, blockAlign))
   }
 }

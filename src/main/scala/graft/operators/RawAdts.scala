@@ -8,8 +8,8 @@ package graft.operators
   * the streaming wrapper virtually all raw `.aac` corpora use: a
   * 12-bit sync, a fixed+variable header pair per frame, an EXPLICIT
   * 13-bit frame length (unlike MP3's computed length), an optional
-  * CRC-16 (same 0x8005 polynomial as MPEG-1 audio), and 1024 output
-  * samples per raw data block. Everything a 100 TB ingest needs —
+  * CRC-16 (the same [[RawBytes.crc16]] as MPEG-1 audio), and 1024
+  * output samples per raw data block. Everything a 100 TB ingest needs —
   * frame walk, duration, sample rate/channels, corrupt triage — is
   * derivable from the header alone; [[decode]] throws the same typed
   * [[RawMp3.Mp3DecodeUnsupported]] boundary (no conformance reference
@@ -71,30 +71,15 @@ object RawAdts {
   def sniff(p: Array[Byte]): Boolean =
     parseHeader(p, 0).exists(h => h.frameBytes <= p.length)
 
-  /** CRC-16 poly 0x8005 init 0xFFFF over the 7 header bytes. NOTE:
-    * ISO 13818-7's adts_error_check covers spec-defined PAYLOAD bit
+  /** CRC-16 ([[RawBytes.crc16]]) from 0xFFFF over the 7 header bytes.
+    * NOTE: ISO 13818-7's adts_error_check covers spec-defined PAYLOAD bit
     * positions too (scalefactor/section boundaries a framing-only
     * layer does not model); this engine's check is the header-prefix
     * integrity subset — [[framingPayload]] writes exactly what this
     * validates, and the boundary is documented rather than silent.
     */
-  def crc16Header(p: Array[Byte], off: Int): Int = {
-    var crc = 0xffff
-    var j = 0
-    while (j < 7) {
-      val byte = p(off + j) & 0xff
-      var i = 7
-      while (i >= 0) {
-        val bit = (byte >>> i) & 1
-        val c15 = (crc >>> 15) & 1
-        crc = (crc << 1) & 0xffff
-        if ((c15 ^ bit) == 1) crc ^= 0x8005
-        i -= 1
-      }
-      j += 1
-    }
-    crc
-  }
+  def crc16Header(p: Array[Byte], off: Int): Int =
+    RawBytes.crc16(p, off, 7, 0xffff)
 
   def storedCrc(p: Array[Byte], off: Int): Int =
     ((p(off + 7) & 0xff) << 8) | (p(off + 8) & 0xff)

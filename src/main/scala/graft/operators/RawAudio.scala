@@ -9,51 +9,45 @@ package graft.operators
   * behind the stub boundary.
   */
 object RawAudio {
+  import RawBytes.{le16, le32, putLe16, putLe32}
 
   /** Decoded clip: interleaved 16-bit samples. */
   final case class Clip(sampleRate: Int, channels: Int, samples: Array[Short])
 
   def sniff(p: Array[Byte]): String =
-    if (p.length >= 12 && p(0) == 'R' && p(1) == 'I' && p(2) == 'F' &&
-      p(3) == 'F' && p(8) == 'W' && p(9) == 'A' && p(10) == 'V' &&
-      p(11) == 'E') "audio/wav"
-    else "unknown"
-
-  private def le32(p: Array[Byte], off: Int): Int =
-    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-
-  private def le16(p: Array[Byte], off: Int): Int =
-    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+    if (RawBytes.isRiff(p, "WAVE")) "audio/wav" else "unknown"
 
   /** RIFF/WAVE with fmt and data chunks in any order. Format tags:
     * 1 = PCM16, 6 = G.711 A-law, 7 = G.711 mu-law (8-bit companded,
-    * expanded to PCM16 via [[RawG711]] — a REAL lossy decode path).
-    * Handles data-before-fmt by deferring the expansion.
+    * expanded to PCM16 via [[RawG711]] — a REAL lossy decode path),
+    * 0x0011 = mono IMA ADPCM ([[RawAdpcm.decodeBlocks]]; the fact
+    * chunk carries the sample count). Handles data-before-fmt by
+    * deferring the expansion.
     */
   def decodeWav(p: Array[Byte]): Clip = {
     require(sniff(p) == "audio/wav", "not a WAV")
-    var off = 12
-    var rate = 0; var channels = 0; var fmtTag = -1
-    var dataOff = -1; var dataSize = -1
-    while (off + 8 <= p.length) {
-      val id = new String(p, off, 4, "US-ASCII")
-      val size = le32(p, off + 4)
-      id match {
+    var rate = 0; var channels = 0; var fmtTag = -1; var blockAlign = 0
+    var nSamples = -1; var dataOff = -1; var dataSize = -1
+    RawBytes.chunks(p).foreach { c =>
+      c.id match {
         case "fmt " =>
-          fmtTag = le16(p, off + 8)
-          require(fmtTag == 1 || fmtTag == 6 || fmtTag == 7,
-            s"unsupported WAV format tag $fmtTag (PCM/A-law/mu-law only)")
-          channels = le16(p, off + 10)
-          rate = le32(p, off + 12)
-          val bps = le16(p, off + 22)
-          require(bps == (if (fmtTag == 1) 16 else 8),
-            s"format tag $fmtTag requires ${if (fmtTag == 1) 16 else 8}-bit")
-        case "data" =>
-          dataOff = off + 8; dataSize = size
-        case _ => () // skip unknown chunks (LIST, fact, ...)
+          fmtTag = le16(p, c.off)
+          channels = le16(p, c.off + 2)
+          rate = le32(p, c.off + 4)
+          blockAlign = le16(p, c.off + 12)
+          val bps = le16(p, c.off + 14)
+          if (fmtTag == 0x11) require(channels == 1, "mono ADPCM only")
+          else {
+            require(fmtTag == 1 || fmtTag == 6 || fmtTag == 7,
+              s"unsupported WAV format tag $fmtTag " +
+                "(PCM/A-law/mu-law/IMA ADPCM only)")
+            require(bps == (if (fmtTag == 1) 16 else 8),
+              s"format tag $fmtTag requires ${if (fmtTag == 1) 16 else 8}-bit")
+          }
+        case "fact" => nSamples = le32(p, c.off)
+        case "data" => dataOff = c.off; dataSize = c.size
+        case _ => () // skip unknown chunks (LIST, ...)
       }
-      off += 8 + size + (size & 1) // chunks pad to even lengths
     }
     require(dataOff >= 0 && rate > 0, "missing fmt/data chunk")
     val samples = fmtTag match {
@@ -73,68 +67,58 @@ object RawAudio {
         var i = 0
         while (i < dataSize) { out(i) = RawG711.mulawDecode(p(dataOff + i)); i += 1 }
         out
+      case 0x11 =>
+        require(blockAlign > 0, "missing ADPCM block align")
+        val spb = (blockAlign - 4) * 2 + 1
+        val n = if (nSamples >= 0) nSamples else dataSize / blockAlign * spb
+        RawAdpcm.decodeBlocks(
+          java.util.Arrays.copyOfRange(p, dataOff, dataOff + dataSize),
+          blockAlign, n)
     }
     Clip(rate, channels, samples)
+  }
+
+  /** The 16-byte WAVEFORMAT fields of a `fmt ` chunk, then `extra`
+    * 16-bit fields (cbSize and what it counts).
+    */
+  private[operators] def fmtChunk(tag: Int, channels: Int, rate: Int,
+      byteRate: Int, blockAlign: Int, bitsPerSample: Int,
+      extra: Int*): Array[Byte] = {
+    val f = new Array[Byte](16 + 2 * extra.length)
+    putLe16(f, 0, tag)
+    putLe16(f, 2, channels)
+    putLe32(f, 4, rate)
+    putLe32(f, 8, byteRate)
+    putLe16(f, 12, blockAlign)
+    putLe16(f, 14, bitsPerSample)
+    extra.zipWithIndex.foreach { case (v, i) => putLe16(f, 16 + 2 * i, v) }
+    f
   }
 
   /** RIFF/WAVE writer for G.711 payloads (format tag 6 = A-law,
     * 7 = mu-law): one companded byte per sample.
     */
   def encodeWavG711(clip: Clip, mulaw: Boolean): Array[Byte] = {
-    val n = clip.samples.length
-    val pad = n & 1
-    val out = new Array[Byte](44 + n + pad)
-    def putStr(off: Int, s: String): Unit =
-      s.getBytes("US-ASCII").zipWithIndex.foreach { case (b, i) => out(off + i) = b }
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putStr(0, "RIFF"); putLe32(4, 36 + n + pad); putStr(8, "WAVE")
-    putStr(12, "fmt "); putLe32(16, 16); putLe16(20, if (mulaw) 7 else 6)
-    putLe16(22, clip.channels); putLe32(24, clip.sampleRate)
-    putLe32(28, clip.sampleRate * clip.channels) // byte rate: 1 B/sample
-    putLe16(32, clip.channels); putLe16(34, 8) // block align, bps
-    putStr(36, "data"); putLe32(40, n)
-    var i = 0
-    while (i < n) {
-      out(44 + i) =
-        if (mulaw) RawG711.mulawEncode(clip.samples(i))
-        else RawG711.alawEncode(clip.samples(i))
-      i += 1
-    }
-    out
+    val data = clip.samples.map(s =>
+      if (mulaw) RawG711.mulawEncode(s) else RawG711.alawEncode(s))
+    RawBytes.riff("WAVE",
+      "fmt " -> fmtChunk(if (mulaw) 7 else 6, clip.channels, clip.sampleRate,
+        clip.sampleRate * clip.channels, // byte rate: 1 B/sample
+        clip.channels, 8),
+      "data" -> data)
   }
 
   def encodeWav(clip: Clip): Array[Byte] = {
-    val dataBytes = clip.samples.length * 2
-    val out = new Array[Byte](44 + dataBytes)
-    def putStr(off: Int, s: String): Unit =
-      s.getBytes("US-ASCII").zipWithIndex.foreach { case (b, i) => out(off + i) = b }
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putStr(0, "RIFF"); putLe32(4, 36 + dataBytes); putStr(8, "WAVE")
-    putStr(12, "fmt "); putLe32(16, 16); putLe16(20, 1)
-    putLe16(22, clip.channels); putLe32(24, clip.sampleRate)
-    putLe32(28, clip.sampleRate * clip.channels * 2) // byte rate
-    putLe16(32, clip.channels * 2); putLe16(34, 16) // block align, bps
-    putStr(36, "data"); putLe32(40, dataBytes)
+    val data = new Array[Byte](clip.samples.length * 2)
     var i = 0
     while (i < clip.samples.length) {
-      putLe16(44 + i * 2, clip.samples(i) & 0xffff)
+      putLe16(data, i * 2, clip.samples(i))
       i += 1
     }
-    out
+    RawBytes.riff("WAVE",
+      "fmt " -> fmtChunk(1, clip.channels, clip.sampleRate,
+        clip.sampleRate * clip.channels * 2, clip.channels * 2, 16),
+      "data" -> data)
   }
 
   /** Exact integer aggregates: (sum |s|, sum s^2) — both fit a Long for

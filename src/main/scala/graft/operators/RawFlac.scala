@@ -13,8 +13,8 @@ package graft.operators
   * all four channel assignments (independent, left/side, right/side,
   * mid/side with the odd-bit reconstruction), sample sizes 8-32 bits,
   * UTF-8-coded frame/sample numbers, and CRC-8 (poly 0x07) header +
-  * CRC-16 (poly 0x8005) frame verification. Unknown metadata blocks
-  * are skipped like ancillary PNG chunks.
+  * CRC-16 ([[RawBytes.crc16]], init 0) frame verification. Unknown
+  * metadata blocks are skipped like ancillary PNG chunks.
   *
   * Encoder scope (round-trip + driver payloads): STREAMINFO + fixed-
   * blocking frames; per subframe the best of CONSTANT / FIXED 0-4
@@ -53,23 +53,6 @@ object RawFlac {
     crc
   }
 
-  /** CRC-16, poly x^16+x^15+x^2+1 (0x8005), init 0 — frame checksum. */
-  def crc16(p: Array[Byte], off: Int, len: Int): Int = {
-    var crc = 0
-    var i = off
-    while (i < off + len) {
-      crc ^= (p(i) & 0xff) << 8
-      var b = 0
-      while (b < 8) {
-        crc = if ((crc & 0x8000) != 0) ((crc << 1) ^ 0x8005) & 0xffff
-          else (crc << 1) & 0xffff
-        b += 1
-      }
-      i += 1
-    }
-    crc
-  }
-
   // ------------------------------------------------------- bit reader
 
   /** MSB-first bit reader (FLAC is big-endian bit-packed — the
@@ -86,12 +69,6 @@ object RawFlac {
     }
     def readBits(n: Int): Int = {
       var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-    def readBitsLong(n: Int): Long = {
-      var v = 0L
       var i = 0
       while (i < n) { v = (v << 1) | readBit(); i += 1 }
       v
@@ -232,7 +209,7 @@ object RawFlac {
     br.alignByte()
     val bodyLen = br.pos - frameStart
     val storedCrc16 = br.readBits(16)
-    require(storedCrc16 == crc16(br.data, frameStart, bodyLen),
+    require(storedCrc16 == RawBytes.crc16(br.data, frameStart, bodyLen, 0),
       "FLAC: frame CRC-16 mismatch")
     // stereo decorrelation
     chCode match {
@@ -495,7 +472,7 @@ object RawFlac {
       bw2.alignByte()
       val body = bw2.bytes
       out.write(body)
-      val crc = crc16(body, 0, body.length)
+      val crc = RawBytes.crc16(body, 0, body.length, 0)
       out.write((crc >> 8) & 0xff)
       out.write(crc & 0xff)
       start += bs

@@ -47,7 +47,7 @@ object RawGif {
     require(sniff(p), "not a GIF")
     var pos = 6
     def u8(): Int = { val v = p(pos) & 0xff; pos += 1; v }
-    def u16(): Int = { val v = (p(pos) & 0xff) | ((p(pos + 1) & 0xff) << 8); pos += 2; v }
+    def u16(): Int = { val v = RawBytes.le16(p, pos); pos += 2; v }
 
     val sw = u16(); val sh = u16()
     val flags = u8()
@@ -274,15 +274,14 @@ object RawGif {
     val palBits = 31 - Integer.numberOfLeadingZeros(n) // log2
     val out = new java.io.ByteArrayOutputStream()
     def b(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { b(v); b(v >> 8) }
     out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h)
+    RawBytes.writeLe16(out, w); RawBytes.writeLe16(out, h)
     b(0x80 | ((palBits - 1) & 7)) // global table, size 2^palBits
     b(0) // background index
     b(0) // aspect
     palette.foreach { c => b(c >> 16); b(c >> 8); b(c) }
     b(0x2c) // image descriptor
-    le16(0); le16(0); le16(w); le16(h)
+    Seq(0, 0, w, h).foreach(RawBytes.writeLe16(out, _)) // left, top, w, h
     b(0) // no local table, not interlaced
     val minCode = math.max(2, palBits)
     b(minCode)

@@ -63,17 +63,11 @@ object RawImage {
 
   // ---- BMP (24bpp uncompressed) ---------------------------------------
 
-  private def le32(p: Array[Byte], off: Int): Int =
-    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-
-  private def le16(p: Array[Byte], off: Int): Int =
-    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-
   /** BITMAPFILEHEADER (14 B) + BITMAPINFOHEADER: 24bpp, BI_RGB only;
     * rows bottom-up, padded to 4-byte boundaries, pixels stored BGR.
     */
   def decodeBmp(p: Array[Byte]): Image = {
+    import RawBytes.{le16, le32}
     require(p(0) == 'B' && p(1) == 'M', "not a BMP")
     val dataOff = le32(p, 10)
     val w = le32(p, 18)

@@ -8,7 +8,7 @@ package graft.operators
   * 32-bit frame-header field set, the bitrate/sample-rate tables for
   * every (version, layer) pair, the exact frame-length and
   * samples-per-frame formulas, CRC-16 validation of protected frames
-  * (poly 0x8005, init 0xFFFF, over the last two header bytes + the
+  * (init 0xFFFF, over the last two header bytes + the
   * layer-III side info), Xing/Info and VBRI VBR-header detection, and
   * the whole-stream frame walk (frames, samples, duration, average
   * bitrate). A 100 TB multimodal corpus job needs exactly this layer
@@ -168,30 +168,16 @@ object RawMp3 {
     parseHeader(p, s).exists(h => s + h.frameBytes <= p.length)
   }
 
-  /** CRC-16 (poly 0x8005, init 0xFFFF, MSB-first) — ISO 11172-3
+  /** CRC-16 ([[RawBytes.crc16]], init 0xFFFF) — ISO 11172-3
     * §2.4.3.1: over header bytes 3-4 then the protected audio data
     * (for Layer III: the side info).
     */
   def crc16(p: Array[Byte], frameOff: Int, h: Mp3Header): Int = {
-    var crc = 0xffff
-    def feed(b: Int): Unit = {
-      var i = 7
-      while (i >= 0) {
-        val bit = (b >>> i) & 1
-        val c15 = (crc >>> 15) & 1
-        crc = (crc << 1) & 0xffff
-        if ((c15 ^ bit) == 1) crc ^= 0x8005
-        i -= 1
-      }
-    }
-    feed(p(frameOff + 2) & 0xff)
-    feed(p(frameOff + 3) & 0xff)
     val prot = if (h.layer == 3) sideInfoBytes(h.versionId, h.channelMode)
       else 0 // layers I/II protect bit-allocation bits; framing layer
              // validates layer-III streams only (test-pinned)
-    var i = 0
-    while (i < prot) { feed(p(frameOff + 6 + i) & 0xff); i += 1 }
-    crc
+    RawBytes.crc16(p, frameOff + 6, prot,
+      RawBytes.crc16(p, frameOff + 2, 2, 0xffff))
   }
 
   /** Stored CRC of a protected frame (two bytes after the header). */

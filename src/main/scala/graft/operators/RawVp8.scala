@@ -146,8 +146,8 @@ object RawVp8 {
     val part0Size = tag >>> 5
     require((data(3) & 0xff) == 0x9d && (data(4) & 0xff) == 0x01 &&
       (data(5) & 0xff) == 0x2a, "VP8: bad keyframe start code")
-    val width = ((data(6) & 0xff) | ((data(7) & 0xff) << 8)) & 0x3fff
-    val height = ((data(8) & 0xff) | ((data(9) & 0xff) << 8)) & 0x3fff
+    val width = RawBytes.le16(data, 6) & 0x3fff
+    val height = RawBytes.le16(data, 8) & 0x3fff
     require(width > 0 && height > 0, "VP8: zero dimension")
 
     val part0Start = 10

@@ -333,34 +333,14 @@ object RawVp8Enc {
     out(1) = ((tag >> 8) & 0xff).toByte
     out(2) = ((tag >> 16) & 0xff).toByte
     out(3) = 0x9d.toByte; out(4) = 0x01.toByte; out(5) = 0x2a.toByte
-    out(6) = (w & 0xff).toByte; out(7) = ((w >> 8) & 0x3f).toByte
-    out(8) = (h & 0xff).toByte; out(9) = ((h >> 8) & 0x3f).toByte
+    RawBytes.putLe16(out, 6, w & 0x3fff)
+    RawBytes.putLe16(out, 8, h & 0x3fff)
     System.arraycopy(p1, 0, out, 10, p1.length)
     System.arraycopy(p2, 0, out, 10 + p1.length, p2.length)
     out
   }
 
   /** Wrap a raw VP8 frame in a minimal RIFF/WEBP container. */
-  def encodeWebp(w: Int, h: Int, y: Array[Int], u: Array[Int], v: Array[Int]): Array[Byte] = {
-    val frame = encode(w, h, y, u, v)
-    val padded = frame.length + (frame.length & 1)
-    val out = new Array[Byte](20 + padded)
-    def ascii(s: String, off: Int): Unit = {
-      var i = 0
-      while (i < s.length) { out(off + i) = s.charAt(i).toByte; i += 1 }
-    }
-    def le32(v: Int, off: Int): Unit = {
-      out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    ascii("RIFF", 0)
-    le32(12 + padded, 4)
-    ascii("WEBP", 8)
-    ascii("VP8 ", 12)
-    le32(frame.length, 16)
-    System.arraycopy(frame, 0, out, 20, frame.length)
-    out
-  }
+  def encodeWebp(w: Int, h: Int, y: Array[Int], u: Array[Int], v: Array[Int]): Array[Byte] =
+    RawBytes.riff("WEBP", "VP8 " -> encode(w, h, y, u, v))
 }

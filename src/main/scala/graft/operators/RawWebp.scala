@@ -36,9 +36,7 @@ object RawWebp {
   // ---------------------------------------------------------------- sniff
 
   def sniff(p: Array[Byte]): Boolean =
-    p.length >= 16 && p(0) == 'R' && p(1) == 'I' && p(2) == 'F' &&
-      p(3) == 'F' && p(8) == 'W' && p(9) == 'E' && p(10) == 'B' &&
-      p(11) == 'P'
+    p.length >= 16 && RawBytes.isRiff(p, "WEBP")
 
   /** True when the container carries a LOSSLESS (VP8L) image —
     * directly or inside an extended VP8X layout.
@@ -52,22 +50,11 @@ object RawWebp {
   def sniffLossy(p: Array[Byte]): Boolean =
     sniff(p) && findChunk(p, "VP8 ").isDefined
 
-  private def le32(p: Array[Byte], off: Int): Int =
-    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-      ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-
-  /** Walk RIFF chunks inside the WEBP form; return (payloadOff, size). */
-  private[operators] def findChunk(p: Array[Byte], typ: String): Option[(Int, Int)] = {
-    var i = 12
-    while (i + 8 <= p.length) {
-      val t = new String(p, i, 4, "US-ASCII")
-      val sz = le32(p, i + 4)
-      if (sz < 0 || i + 8 + sz > p.length) return None
-      if (t == typ) return Some((i + 8, sz))
-      i += 8 + sz + (sz & 1) // chunks are 2-byte aligned
-    }
-    None
-  }
+  /** The first `typ` chunk inside the WEBP form: (payloadOff, size).
+    * None when it is absent, truncated, or after a truncated chunk.
+    */
+  private[operators] def findChunk(p: Array[Byte], typ: String): Option[(Int, Int)] =
+    RawBytes.chunks(p).find(_.id == typ).map(c => (c.off, c.size))
 
   // ------------------------------------------------------------ bit reader
 
@@ -932,22 +919,9 @@ object RawWebp {
     }
     val stream = bw.bytes
     // container: RIFF ( WEBP VP8L(sig + stream) )
-    val payloadLen = 1 + stream.length
-    val padded = payloadLen + (payloadLen & 1)
-    val out = new java.io.ByteArrayOutputStream()
-    def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    ascii("RIFF")
-    le(4 + 8 + padded)
-    ascii("WEBP")
-    ascii("VP8L")
-    le(payloadLen)
-    out.write(0x2f)
-    out.write(stream)
-    if ((payloadLen & 1) == 1) out.write(0)
-    out.toByteArray
+    val payload = new Array[Byte](1 + stream.length)
+    payload(0) = 0x2f
+    System.arraycopy(stream, 0, payload, 1, stream.length)
+    RawBytes.riff("WEBP", "VP8L" -> payload)
   }
 }

@@ -21,10 +21,6 @@ object TableSink {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** CTAS analog: materialize a query result as a parquet table. */
-  def createTableAs(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Round-trip sink check: write orders partitioned by order year
     * (dynamic partitioning, partition column derived in-flight), read the
     * partitioned layout back, and aggregate per partition. The oracle

@@ -83,7 +83,7 @@ class AdpcmSpec extends AnyFunSuite {
     val clip = RawAudio.Clip(8000, 1, samples)
     val wav = RawAdpcm.encodeWav(clip, blockAlign = 16)
     assert(RawAudio.sniff(wav) == "audio/wav")
-    val back = RawAdpcm.decodeWav(wav)
+    val back = RawAudio.decodeWav(wav)
     assert(back.sampleRate == 8000 && back.channels == 1)
     assert(back.samples.length == 175)
     val direct = RawAdpcm.decodeBlocks(

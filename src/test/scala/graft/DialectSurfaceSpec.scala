@@ -135,6 +135,35 @@ class DialectSurfaceSpec extends AnyFunSuite {
     assert(r.isNullAt(4))
   }
 
+  test("date_add/date_sub on a DATE answer like Spark's date_add and d +/- interval") {
+    val rows = Engine.sql(spark, TestSpark.sf,
+      """select id, greatest(c, date '2020-06-30') as g from (
+        |  select id, date_add(date '2020-01-01', cast(id as int)) as c
+        |  from range(0, 500)) where c > date '2020-06-30'""".stripMargin)
+      .collect().map(r => r.getLong(0) -> r.get(1).toString).sortBy(_._1)
+    assert(rows.length === 318) // 2020-01-01 + 182 days = 2020-07-01
+    assert(rows.head === (182L -> "2020-07-01"))
+    assert(rows.last === (499L -> "2021-05-14"))
+    def cmp(sql: String): Seq[String] = {
+      val r = one(sql)
+      (0 until r.length).map(i => String.valueOf(r.get(i)))
+    }
+    assert(cmp(
+      """date_add(date '2020-01-01', 3) a, date_sub(date '2020-01-01', 3) b,
+        |date_add(date '2020-01-01', cast(3 as bigint)) c,
+        |typeof(date_add(date '2020-01-01', 3)) t""".stripMargin) ===
+      Seq("2020-01-04", "2019-12-29", "2020-01-04", "date"))
+    val forms = Seq(
+      "date '2020-01-01'" -> "interval 3 days",
+      "date '2020-01-31'" -> "interval 1 month",
+      "date '2020-01-01'" -> "interval 25 hours")
+    for ((d, iv) <- forms) {
+      assert(cmp(s"date_add($d, $iv) a, date_sub($d, $iv) b") ===
+        cmp(s"$d + $iv a, $d - $iv b"), s"$d $iv")
+      assert(cmp(s"typeof(date_add($d, $iv)) a") === cmp(s"typeof($d + $iv) a"))
+    }
+  }
+
   test("type extrema constants carry their exact width") {
     val r = one(
       """max_tinyint() a, min_tinyint() b, max_smallint() c,

@@ -88,6 +88,42 @@ class RawImageSpec extends AnyFunSuite {
       32768L * 32768 + 5L * 5)
   }
 
+  test("WAV chunk walk ends at a negative or over-long chunk size") {
+    import graft.operators.{RawAdpcm, RawAudio, RawBytes}
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // a walk that never advances spins without checking for interrupts,
+    // so the decode runs on a pool thread and the test thread waits
+    implicit val signaler: Signaler = ThreadSignaler
+    def rejected(p: Array[Byte]): Unit = failAfter(10.seconds) {
+      val decoded = Future(RawAudio.decodeWav(p))
+      intercept[IllegalArgumentException](
+        Await.result(decoded, scala.concurrent.duration.Duration.Inf))
+    }
+    // 28 bytes: RIFF/WAVE holding one LIST chunk whose size reads
+    // 0xFFFFFFF8 (-8 as an Int)
+    val list = RawBytes.riff("WAVE", "LIST" -> new Array[Byte](8))
+    RawBytes.putLe32(list, 16, 0xfffffff8)
+    rejected(list)
+    val clip = RawAudio.Clip(8000, 1, Array.tabulate[Short](45)(_.toShort))
+    // a chunk's size field is the 4 bytes just before its payload
+    def withDataSize(wav: Array[Byte], size: Int): Array[Byte] = {
+      val p = wav.clone()
+      val data = RawBytes.chunks(wav).find(_.id == "data").get
+      RawBytes.putLe32(p, data.off - 4, size)
+      p
+    }
+    for (wav <- Seq(RawAudio.encodeWav(clip), // PCM16, tag 1
+        RawAdpcm.encodeWav(clip, blockAlign = 8))) { // IMA ADPCM, tag 0x0011
+      assert(RawAudio.decodeWav(wav).samples.length == 45)
+      rejected(withDataSize(wav, -8))
+      rejected(withDataSize(wav, wav.length)) // runs past the end
+    }
+  }
+
   test("real-format dispatch routes PPM payloads off the stub path") {
     val ppm = graft.operators.MultimodalOps.ppmPayload(7L, 8, 8)
     val (fmt, w, h, feat) = graft.operators.MultimodalOps.decodeAny(ppm)
